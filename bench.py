@@ -7,37 +7,28 @@ Prints ONE JSON line:
 
 Execution is forced with the noop sink (full computation, no driver-side
 collect, no output I/O) so timings reflect the query plan, not pickling.
+`warm` and `time_query` are the one session warm-up and the one timed run
+that tools/ab_interleave.py and tools/scale_probe.py share.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from jigsaw_spark.session import get_spark  # noqa: E402
-from jigsaw_spark.plans.queries import QUERIES  # noqa: E402
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    spark = get_spark("jigsaw_spark-bench", cpus=cpus)
-
-    # warm the JVM + parquet footers + Python/Arrow workers once so
-    # per-query times measure the plan, not one-time session setup. The
-    # warm kernel does real hash work so every worker slot actually spawns
-    # a Python process and imports the deps the query kernels use.
-    import glob as _glob
-
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM, the parquet footers and the Python/Arrow workers once so
+    per-query times measure the plan, not one-time session setup. The kernel
+    does real hash work so every worker slot actually spawns a Python
+    process and imports the deps the query kernels use."""
+    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         spark.read.parquet(p).count()
 
-    def _warm(batches):
+    def kernel(batches):
         import hashlib
 
         import numpy as np  # noqa: F401
@@ -48,22 +39,40 @@ def main() -> None:
             ]
             yield pdf[["id"]]
 
-    spark.range(200_000).repartition(cpus).mapInPandas(
-        _warm, "id long"
-    ).write.mode("overwrite").format("noop").save()
+    spark.range(200_000).repartition(
+        spark.sparkContext.defaultParallelism
+    ).mapInPandas(kernel, "id long").write.mode("overwrite").format(
+        "noop"
+    ).save()
+
+
+def time_query(spark, spec, sf_dir: str):
+    """(seconds, DataFrame) for one run of ``spec`` into the noop sink.
+    Plan construction, with its eager checkpoints and driver collects,
+    stays inside the timed region."""
+    t0 = time.perf_counter()
+    df = spec.spark(spark, sf_dir)
+    df.write.mode("overwrite").format("noop").save()
+    return round(time.perf_counter() - t0, 4), df
+
+
+def main() -> None:
+    from jigsaw_spark.plans.queries import QUERIES
+    from jigsaw_spark.session import DEFAULT_SF_DIR, get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+    spark = get_spark("jigsaw_spark-bench", cpus=cpus)
+    warm(spark, sf_dir)
 
     # two passes, report min: single-pass timings on a 32-thread local JVM
     # swing 2-3x on GC pauses and Python-worker churn; the min of two runs
-    # is a stable estimate of actual plan cost. Plan construction +
-    # compilation stays inside the timed region both times.
+    # is a stable estimate of actual plan cost.
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     timings: dict[str, float] = {}
     for _ in range(passes):
         for name, spec in QUERIES.items():
-            t0 = time.perf_counter()
-            df = spec.spark(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            elapsed = round(time.perf_counter() - t0, 4)
+            elapsed, _ = time_query(spark, spec, sf_dir)
             timings[name] = min(timings.get(name, elapsed), elapsed)
 
     total = round(sum(timings.values()), 4)

@@ -1618,57 +1618,17 @@ from jigsaw_spark.plans import queries_r74  # noqa: E402,F401
 from jigsaw_spark.plans import queries_r75  # noqa: E402,F401
 
 
-# ---------------------------------------------------------------------------
-# Registration order == driver certification order. The driver's correctness
-# gate walks QUERIES in insertion order with a bounded window (exactly the
-# first 50 names every round so far). Round-14 rotation (verdict r13 #1):
-#   slots 1-2   — the r75 queue pair (dedup_pooled_text_detectors +
-#                 dq_cluster_safe_repair): first driver rows for the only
-#                 2 never-certified registry queries.
-#   slots 3-15  — changed-code re-certs, direct rewrites this round
-#                 (advisor-r10 rule, standing policy): the repair-family
-#                 barrier cuts, the ANN single-window forms, the JVM-form
-#                 aggregate rewrites, and the fused sweeps.
-#   slots 16-50 — changed-code re-certs, operator-inheritance: consumers
-#                 of the r14 narrow keeper frame / simhash kernel
-#                 (keeper_frames, keeper_pairs, near_dup_keepers,
-#                 simhash_pairs rewrites — results pinned identical by
-#                 equivalence tests + the full oracle gate, re-certified
-#                 by the driver here).
-#   behind 50   — three changed-but-deferred names that did not fit the
-#                 window (dedup_components, dedup_simhash,
-#                 mm_phash_near_dup — all r13-certified, all touched only
-#                 through kernel-internal refactors pinned by
-#                 position-invariance tests), then the verdict-r13 stale
-#                 rotation pool (dq_split_repair, rel_rfm_segments,
-#                 agg_countmin_hh, j8_bloom_prune). The pool is longer
-#                 than the window on purpose; names past slot 50 keep
-#                 their certified rows and rotate next round.
-# Overflow boundary: modules queries_r{_OVERFLOW_BOUNDARY}+ queue behind
-# slot 50 for the next round (the r40/.../r70/r75 pattern). r75 entered
-# the window this round, so the boundary advances to 76 (no overflow
-# modules exist — optimization rounds add no queries).
-# The 6 clean rows-only entries (text_bpe_encode, mm_decode_meta, ...)
-# each have their one driver row and are NOT re-rotated (they can never be
-# hash-certified). Everything already certified falls to the back in
-# module-import order.
-# Update tests/test_entry.py's window-policy test (names[0]/names[1] pins)
-# in the same commit as any change here; the overflow exemption derives
-# from _OVERFLOW_BOUNDARY below, shared with tests/test_entry.py.
-# ---------------------------------------------------------------------------
-
-# First queries_r{N} module that queues BEHIND the 50-slot window for the
-# NEXT round's certification. tests/test_entry.py imports this so the
-# policy test and the registry cannot drift (advisor r9 #5).
+# First queries_r{N} module that queues behind the driver's 50-slot
+# certification window. tests/test_entry.py imports it so the window test
+# and the registry cannot drift.
 _OVERFLOW_BOUNDARY = 76
 
-_R14_QUEUE = [
+# Registration order is the driver's certification order: its correctness
+# gate walks QUERIES in order and certifies the first 50 names. These names
+# lead, in this order; every other query follows in module-import order.
+_CERTIFICATION_PRIORITY = [
     "dedup_pooled_text_detectors",
     "dq_cluster_safe_repair",
-]
-
-# direct rewrites this round (OPTIMIZATION_r14.md changes 2-5)
-_R14_REWRITES = [
     "dq_repair_fixpoint",
     "dq_repair_residual",
     "ann_nprobe_tradeoff",
@@ -1682,11 +1642,6 @@ _R14_REWRITES = [
     "ts_session_timeout_sweep",
     "mm_phash_band_sweep",
     "dedup_signature_size_sweep",
-]
-
-# operator-inheritance re-certs: consumers of the narrow keeper frame /
-# refactored simhash kernel (OPTIMIZATION_r14.md change 1)
-_R14_INHERITED = [
     "ann_recall_under_dedup",
     "curation_cluster_extinction",
     "curation_gate_dup_overlap",
@@ -1722,11 +1677,6 @@ _R14_INHERITED = [
     "p_dedup_aware_mix",
     "p_group_kfold",
     "p_leakage_safe_split",
-]
-
-# changed-but-deferred past the window (r13-certified, kernel-internal
-# refactors only, pinned by tests) + the verdict-r13 stale rotation pool
-_R14_BEHIND_WINDOW = [
     "dedup_components",
     "dedup_simhash",
     "mm_phash_near_dup",
@@ -1735,10 +1685,6 @@ _R14_BEHIND_WINDOW = [
     "agg_countmin_hh",
     "j8_bloom_prune",
 ]
-
-_CERTIFICATION_PRIORITY = (
-    _R14_QUEUE + _R14_REWRITES + _R14_INHERITED + _R14_BEHIND_WINDOW
-)
 
 
 def _reorder_registry() -> None:

@@ -37,6 +37,8 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "jigsaw_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -48,6 +50,9 @@ def get_spark(app_name: str = "jigsaw_spark", cpus: int | None = None) -> SparkS
         is the scale path for skewed keys at 100 TB.
       - Arrow on: every pandas-UDF operator (multimodal, CV kernels) moves
         batches via Arrow instead of pickled rows.
+      - Python workers get the package's parent directory on PYTHONPATH,
+        so kernels that reference jigsaw_spark helpers import them from
+        any working directory.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -62,6 +67,7 @@ def get_spark(app_name: str = "jigsaw_spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # runtime row-level filtering: build a bloom filter from the small
         # side of a shuffle join and push it into the big side's scan — at

@@ -1,37 +1,49 @@
 """Interleaved same-session A/B of registered queries between the working
-tree ("new") and a git ref ("old", default HEAD).
+tree ("new") and a git ref ("old", default HEAD): wall time plus counters
+that do not drift (jobs, stages, shuffle bytes and records).
 
-Why: at sf0.1 on a 32-thread local JVM, cross-session min-of-N timings
-mislead — deep-warm sessions flatten everything and the sandbox drifts
-±5 % over hours (r13 lesson). The only trustworthy comparison is
-old/new alternating inside ONE Spark session.
-
-Mechanism: the old side is materialized with `git archive <ref>` into a
-temp dir, the new side is the repo itself; before every timed rep the
-jigsaw_spark package is evicted from sys.modules and re-imported from
-the side's directory (sys.path[0] swap). The repo working tree is never
-touched. Timing methodology matches bench.py: noop sink, plan
-construction inside the timed region.
+Cross-session timings mislead (warm sessions flatten everything, and the
+host drifts ±5 % over hours), so old and new alternate inside ONE session.
+The old side is `git archive <ref>` in a temp dir, the new side the repo
+itself. Before each rep the jigsaw_spark package is evicted and re-imported
+from the side's directory and registered with cloudpickle to pickle by
+value, so Python workers run that side's kernels, not the working tree's.
+Each rep is one bench.time_query. Its counters are the jobs and completed
+stages with ids above the high-water mark taken before it, read from the
+status store with the UI off; streaming micro-batches outside the caller's
+job group count too. A counter that differs between reps prints as a list.
 
 Usage:
-    python tools/ab_interleave.py [-n 4] [--ref HEAD] name [name...]
+    python tools/ab_interleave.py [-n 4] [--ref HEAD] [--sf DIR] \
+        [--explain-dir DIR] name [name...]
+--explain-dir writes each side's first-rep plan to <name>_old.txt and
+<name>_new.txt.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import os
 import shutil
 import subprocess
 import sys
 import tempfile
-import time
+from contextlib import redirect_stdout
 from pathlib import Path
 
+from pyspark import cloudpickle
+
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from bench import time_query, warm  # noqa: E402
+from perfbench.tracing import StatusStore  # noqa: E402
 
 
 def _evict() -> None:
+    if "jigsaw_spark" in cloudpickle.list_registry_pickle_by_value():
+        cloudpickle.unregister_pickle_by_value(sys.modules["jigsaw_spark"])
     for mod in [m for m in sys.modules if m.split(".")[0] == "jigsaw_spark"]:
         del sys.modules[mod]
 
@@ -42,9 +54,37 @@ def _load_queries(side_dir: str):
     try:
         from jigsaw_spark.plans.queries import QUERIES  # noqa: PLC0415
 
+        cloudpickle.register_pickle_by_value(sys.modules["jigsaw_spark"])
         return dict(QUERIES)
     finally:
         sys.path.pop(0)
+
+
+def marks(store: StatusStore) -> tuple[int, int]:
+    """Highest job and stage id the status store has seen so far."""
+    store.drain()
+    return (
+        max((j["jobId"] for j in store.jobs()), default=-1),
+        max((s["stageId"] for s in store.stages()), default=-1),
+    )
+
+
+def counters(store: StatusStore, since: tuple[int, int]) -> dict[str, int]:
+    """Jobs, completed stages and their shuffle totals with ids above
+    ``since`` (from ``marks``)."""
+    store.drain()
+    stages = [
+        s
+        for s in store.stages()
+        if s["stageId"] > since[1] and s["status"] == "COMPLETE"
+    ]
+    return {
+        "jobs": sum(j["jobId"] > since[0] for j in store.jobs()),
+        "stages": len(stages),
+        "shuffle_write_bytes": sum(s["shuffleWriteBytes"] for s in stages),
+        "shuffle_write_records": sum(s["shuffleWriteRecords"] for s in stages),
+        "shuffle_read_bytes": sum(s["shuffleReadBytes"] for s in stages),
+    }
 
 
 def main() -> None:
@@ -56,6 +96,7 @@ def main() -> None:
         "--sf",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
+    ap.add_argument("--explain-dir", type=Path, default=None)
     args = ap.parse_args()
 
     old_dir = tempfile.mkdtemp(prefix="ab_old_")
@@ -65,60 +106,49 @@ def main() -> None:
         check=True,
     )
 
-    sys.path.insert(0, str(REPO))
-    from jigsaw_spark.session import get_spark  # noqa: E402
+    from jigsaw_spark.session import get_spark  # noqa: PLC0415
 
     spark = get_spark("jigsaw_spark-ab")
-    sys.path.pop(0)
-
-    import glob
-
-    for p in sorted(glob.glob(os.path.join(args.sf, "*.parquet"))):
-        spark.read.parquet(p).count()
-
-    def _warm(batches):
-        import hashlib
-
-        for pdf in batches:
-            pdf["h"] = [
-                hashlib.md5(str(x).encode()).hexdigest() for x in pdf["id"]
-            ]
-            yield pdf[["id"]]
-
-    spark.range(200_000).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_warm, "id long").write.mode("overwrite").format(
-        "noop"
-    ).save()
+    store = StatusStore(spark)
+    warm(spark, args.sf)
+    if args.explain_dir:
+        args.explain_dir.mkdir(parents=True, exist_ok=True)
 
     sides = {"old": old_dir, "new": str(REPO)}
-    results: dict[str, dict[str, list[float]]] = {
-        n: {"old": [], "new": []} for n in args.names
-    }
+    times = {n: {"old": [], "new": []} for n in args.names}
+    counts = {n: {"old": [], "new": []} for n in args.names}
     try:
         for rep in range(args.n):
             for side, sdir in sides.items():
                 qs = _load_queries(sdir)
                 for name in args.names:
-                    spec = qs[name]
                     spark.sparkContext.setJobDescription(
                         f"ab {name} {side} rep{rep}"
                     )
-                    t0 = time.perf_counter()
-                    df = spec.spark(spark, args.sf)
-                    df.write.mode("overwrite").format("noop").save()
-                    results[name][side].append(
-                        round(time.perf_counter() - t0, 4)
-                    )
+                    since = marks(store)
+                    elapsed, df = time_query(spark, qs[name], args.sf)
+                    times[name][side].append(elapsed)
+                    counts[name][side].append(counters(store, since))
+                    if args.explain_dir and rep == 0:
+                        buf = io.StringIO()
+                        with redirect_stdout(buf):
+                            df.explain("formatted")
+                        path = args.explain_dir / f"{name}_{side}.txt"
+                        path.write_text(buf.getvalue())
         spark.sparkContext.setJobDescription(None)
         for name in args.names:
-            o, n = results[name]["old"], results[name]["new"]
+            o, n = times[name]["old"], times[name]["new"]
             print(
                 f"AB {name}: old_min={min(o)} new_min={min(n)} "
                 f"old={o} new={n} "
                 f"speedup_min={round(min(o) / min(n), 3)}",
                 flush=True,
             )
+            for side, reps in counts[name].items():
+                cols = ((k, [r[k] for r in reps]) for k in reps[0])
+                print(f"  {side}: " + " ".join(
+                    f"{k}={v[0] if len(set(v)) == 1 else v}" for k, v in cols
+                ), flush=True)
     finally:
         shutil.rmtree(old_dir, ignore_errors=True)
 

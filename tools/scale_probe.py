@@ -31,6 +31,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
+from bench import time_query, warm
 from jigsaw_spark.session import get_spark
 from jigsaw_spark.plans.queries import QUERIES
 
@@ -539,17 +540,10 @@ def synthesize(spark, src: str, dst: str, factor: int) -> None:
 
 
 def run(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
-    out: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name].spark(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = best
-    return out
+    return {
+        name: min(time_query(spark, QUERIES[name], sf_dir)[0] for _ in range(2))
+        for name in names
+    }
 
 
 def skew_probe(spark, scaled_dir: str) -> list[str]:
@@ -595,6 +589,7 @@ def main() -> None:
     scaled_dir = f"/tmp/jigsaw_scale_x{args.factor}"
     print(f"synthesizing ×{args.factor} at {scaled_dir} ...", flush=True)
     synthesize(spark, args.sf, scaled_dir, args.factor)
+    warm(spark, args.sf)
 
     base = run(spark, args.sf, PROBES)
     big = run(spark, scaled_dir, PROBES)
