@@ -17,7 +17,7 @@ standard distributed-dedup shape:
     weighted bit majority; near-dup = Hamming(sig_a, sig_b) <= threshold.
 
 Every operator is expressible in ANSI SQL with identical md5-derived
-randomness, so each has an exact DuckDB oracle (plans/queries_llm.py).
+randomness, so each has an exact DuckDB oracle (plans/dedup.py).
 
 Execution strategy: signature computation (minhash, simhash) is perfectly
 row-local, so the production path runs it as an Arrow-batched `mapInPandas`
@@ -75,8 +75,8 @@ def keeper_pairs(df: DataFrame, key: str = "doc_id") -> DataFrame:
     C4-ordered keeper-graph convention every graph query shares (exact
     dedup first so byte-identical copies never inflate the pair space,
     then SimHash banding at Hamming <= 2). Single definition (advisor
-    r9 #1) for queries_r48/r50/r51/r53's graph family; the DuckDB twin
-    is ``_KEEPER_EDGES_CTE`` in plans/queries_llm."""
+    r9 #1) for the graph family; the DuckDB twin is
+    ``_KEEPER_EDGES_CTE`` in plans/dedup.py."""
     frame = _keeper_sig_frame(df, key)
     return _pairs_from_sigs(
         frame.filter(
@@ -92,11 +92,12 @@ def _keeper_sig_frame(
 ) -> DataFrame:
     """(key, keeper, is_dup, simhash): the exact-dedup keeper map AND
     the SimHash signature from ONE map-side pass over the corpus —
-    tokens, fingerprint and signature are all computed before any
-    shuffle, and the keeper window then partitions by fp over (key,
-    fp, simhash) rows. The guide-§8 shape: the text payload NEVER
-    crosses an exchange (the old form shuffled full text through the
-    fp window and stored it in the checkpoint; r13 verdict #3).
+    tokens, fingerprint and signature are all computed before the fp
+    window, which then partitions (key, fp, simhash) rows. One
+    token-array round-robin exchange (``_spread``) replaces the old
+    text shuffle through the fp window; token arrays are about
+    text-sized, so this path is not exchange-free, but the fp window
+    and the checkpoint are narrow (r13 verdict #3).
 
     Signature arithmetic is identical to :func:`simhash` (same
     tokens, same md5 bit rows); token-less docs carry NULL (the
@@ -614,7 +615,7 @@ def simhash(df: DataFrame, key: str, text: str = "text", num_bits: int = 32) -> 
     bit (3 - j%4) of nibble j//4 = bit (num_bits-1-j) of the first
     num_bits/4 hex chars as an int); score_j = Σ cnt·(2·bit-1);
     sig = Σ 2^j·[score_j > 0]. Bit-identical to the relational md5-nibble
-    formulation the DuckDB oracle runs (queries_llm.py keeps the SQL
+    formulation the DuckDB oracle runs (plans/dedup.py keeps the SQL
     adjacent), with zero shuffle instead of a |docs|·|tokens|·num_bits
     explode. Docs with no tokens are dropped (explode semantics)."""
     import numpy as np
@@ -719,6 +720,16 @@ def _pairs_from_sigs(
     )
 
 
+def _uf_find(parent: dict, x):
+    """Union-find root of ``x`` in ``parent``, with path compression."""
+    root = x
+    while parent[root] != root:
+        root = parent[root]
+    while parent[x] != root:
+        parent[x], x = root, parent[x]
+    return root
+
+
 def _union_find_local(edges: DataFrame) -> DataFrame:
     """Single-task union-find (path compression + min-root union) over a
     coalesced edge list — the small-graph physical strategy of
@@ -732,26 +743,18 @@ def _union_find_local(edges: DataFrame) -> DataFrame:
 
         parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
         for pdf in batches:
             for u, v in zip(pdf["u"], pdf["v"]):
                 if u not in parent:
                     parent[u] = u
                 if v not in parent:
                     parent[v] = v
-                ru, rv = find(u), find(v)
+                ru, rv = _uf_find(parent, u), _uf_find(parent, v)
                 if ru != rv:
                     parent[max(ru, rv)] = min(ru, rv)
         nodes = list(parent)
         yield pd.DataFrame(
-            {"doc_id": nodes, "component": [find(n) for n in nodes]}
+            {"doc_id": nodes, "component": [_uf_find(parent, n) for n in nodes]}
         )
 
     return edges.coalesce(1).mapInPandas(
@@ -868,14 +871,6 @@ def _bfs_depth_local(edges: DataFrame, cap: int) -> DataFrame:
         adj: dict = {}
         parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
         for pdf in batches:
             for u, v in zip(pdf["u"], pdf["v"]):
                 adj.setdefault(u, []).append(v)
@@ -883,11 +878,11 @@ def _bfs_depth_local(edges: DataFrame, cap: int) -> DataFrame:
                     parent[u] = u
                 if v not in parent:
                     parent[v] = v
-                ru, rv = find(u), find(v)
+                ru, rv = _uf_find(parent, u), _uf_find(parent, v)
                 if ru != rv:
                     parent[max(ru, rv)] = min(ru, rv)
         # min-root union ⇒ every set's root IS its min member
-        mins = {n for n in parent if find(n) == n}
+        mins = {n for n in parent if _uf_find(parent, n) == n}
         depth = {m: 0 for m in mins}
         cur = mins
         d = 0

@@ -1,7 +1,7 @@
 """Distributed classical-ML trainers beyond k-means/PQ (similarity.py).
 
 The quality-model *scoring* side already exists (`text.py` linear scorer,
-`queries_llm2.text_quality_model`); this module adds the *training* side:
+`plans/text.py:text_quality_model`); this module adds the *training* side:
 a full-batch gradient-descent logistic regression over a feature/embedding
 column — the fastText-style quality-classifier trainer of LLM curation
 pipelines (e.g. CCNet/LLaMA wiki-reference classifiers), expressed

@@ -1,8 +1,7 @@
 """Shared fixed-panel retrieval-eval stage (advisor r9 #3).
 
-``ml_mrr_exact`` (plans/queries_r49.py), ``ml_precision_at_k``
-(plans/queries_r54.py) and ``ml_recall_at_k`` (plans/queries_r56.py) all
-grade the SAME candidate stage: a fixed 200-vector eval panel querying
+``ml_mrr_exact``, ``ml_precision_at_k`` and ``ml_recall_at_k`` (plans/ml.py)
+all grade the SAME candidate stage: a fixed 200-vector eval panel querying
 the full embeddings corpus with brute-force cosine, top-10 by the ANN
 family's (round-9 score DESC, vec_id ASC) tie order, with query and
 candidate labels joined on. Before round 10 that stage was triplicated
@@ -49,8 +48,7 @@ def labeled_panel_topk(
 ) -> DataFrame:
     """(query_id, qlabel, clabel, rank) for the panel's top-10 candidates.
 
-    ``load_table`` is the caller's ``_t``-style loader (passed in to keep
-    this module import-cycle-free with plans.queries)."""
+    ``load_table`` is the caller's ``_t``-style loader."""
     from jigsaw_spark.operators.similarity import cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -4,11 +4,6 @@ import os
 
 import pytest
 
-# Import the full registry before any test module imports a queries_r* module
-# directly: queries_r25 resolves `_morton_sql` from queries_r6 at import time,
-# which dead-ends in a circular import unless jigsaw_spark.plans.queries is
-# the import entry point (the canonical path; test files import submodules).
-from jigsaw_spark.plans import queries as _registry  # noqa: F401
 from jigsaw_spark.session import get_spark, load_tables
 
 SF_SMOKE = "/root/testdata/sf0.001"

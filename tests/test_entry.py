@@ -28,25 +28,14 @@ def test_every_query_runs_at_smoke_sf(spark):
 
 
 def test_certification_window_covers_never_certified():
-    """The driver's correctness gate walks the registry in order with a
-    bounded window of exactly 50 slots. Round-14 policy (verdict r13 #1):
-    slots 1-2 carry the r75 queue pair — the only 2 never-certified
-    registry queries; the rest of the window is changed-code re-certs
-    (the advisor-r10 rule): the round's direct rewrites first, then the
-    narrow-keeper-frame / simhash-kernel inheritance consumers. Three
-    changed-but-deferred names (r13-certified, kernel-internal refactors
-    pinned by tests) plus the verdict-r13 stale pool queue directly
-    behind slot 50. Overflow modules (queries_r{_OVERFLOW_BOUNDARY}+)
-    queue behind slot 50 for the next round — the boundary is a single
-    shared constant in plans/queries.py so this test and the registry
-    cannot drift (advisor r9 #5). Clean rows-only entries
-    (text_bpe_encode, ...) keep their one driver row and are never
-    re-rotated."""
+    """The driver's correctness gate certifies the first 50 registry slots
+    in order. Every oracle-backed query that no driver row has certified
+    yet sits in slots 1-50, led by the two never-certified queries; every
+    other window slot is oracle-backed and already certified."""
     import json
     import pathlib
-    import re
 
-    from jigsaw_spark.plans.queries import QUERIES, _OVERFLOW_BOUNDARY
+    from jigsaw_spark.plans.queries import QUERIES
 
     root = pathlib.Path(__file__).resolve().parents[1]
     certified: set[str] = set()
@@ -59,32 +48,17 @@ def test_certification_window_covers_never_certified():
             certified |= set(json.loads(path.read_text()))
 
     names = list(QUERIES)
-    never = [
+    never = {
         q
         for q in names
         if q not in certified and QUERIES[q].oracle is not None
-    ]
-
-    assert names[0] == "dedup_pooled_text_detectors", (
-        "slot 1 must start the r75-queue debt block (verdict r13 #1)"
-    )
-    assert names[1] == "dq_cluster_safe_repair", (
-        "slot 2 must be the r75 queue's second query (verdict r13 #1)"
-    )
-
-    # all debt (never-certified oracle-backed) sits inside slots 1-50;
-    # modules at/after the overflow boundary (next round's queue) are the
-    # only exemption — derived, not hardcoded (advisor r9 #5)
-    window = names[:50]
-
-    def _is_overflow(module: str) -> bool:
-        m = re.fullmatch(r"jigsaw_spark\.plans\.queries_r(\d+)", module)
-        return m is not None and int(m.group(1)) >= _OVERFLOW_BOUNDARY
-
-    debt = {
-        q for q in never if not _is_overflow(QUERIES[q].spark.__module__)
     }
-    outside = [q for q in debt if q not in window]
+
+    assert names[0] == "dedup_pooled_text_detectors", names[0]
+    assert names[1] == "dq_cluster_safe_repair", names[1]
+
+    window = names[:50]
+    outside = [q for q in never if q not in window]
     assert not outside, f"certification debt outside slots 1-50: {outside}"
 
     # every window slot is oracle-backed (no rows-only row can certify)
@@ -92,7 +66,7 @@ def test_certification_window_covers_never_certified():
     assert not rows_only, f"rows-only entries in the window: {rows_only}"
 
     # non-debt slots are padding and must already be driver-green
-    padding = [q for q in window if q not in debt]
+    padding = [q for q in window if q not in never]
     uncertified_padding = [q for q in padding if q not in certified]
     assert not uncertified_padding, (
         f"padding slots must be long-green re-certs: {uncertified_padding}"

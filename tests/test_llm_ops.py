@@ -704,3 +704,24 @@ def test_near_dup_keepers_token_empty_docs_stay_singletons(spark):
     }
     assert got[1] == 1 and got[2] == 1  # real exact dups still collapse
     assert got[3] == 3 and got[4] == 4 and got[5] == 5  # singletons
+
+
+def test_near_dup_keepers_null_text_docs_stay_singletons(spark):
+    """NULL text has no tokens and no signature, so each NULL-text doc
+    keeps ITSELF, exactly like an empty-text doc: NULL-text docs do not
+    share one keeper (FIXTURES.md §9)."""
+    from jigsaw_spark.operators.dedup import near_dup_keepers
+
+    rows = [
+        (1, None),
+        (2, None),
+        (3, ""),
+        (4, "the quick brown fox jumps over the lazy dog"),
+        (5, "the quick brown fox jumps over the lazy dog"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = {
+        r.doc_id: r.keeper
+        for r in near_dup_keepers(df, "doc_id").collect()
+    }
+    assert got == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4}

@@ -103,7 +103,7 @@ def test_money_sums_invariant_under_partitioning(spark, tables):
     accumulation would flip cents near half-cent boundaries)."""
     from pyspark.sql import functions as F
 
-    from jigsaw_spark.plans.queries import dec2, dsum
+    from jigsaw_spark.plans.registry import dec2, dsum
 
     orders = tables["orders"].select("o_orderstatus", "o_totalprice")
 

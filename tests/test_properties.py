@@ -190,7 +190,7 @@ def test_dsum_equals_exact_decimal_sum(spark, cents, parts):
     inputs for ANY partitioning — the money-aggregation contract."""
     from decimal import Decimal
 
-    from jigsaw_spark.plans.queries import dec2, dsum
+    from jigsaw_spark.plans.registry import dec2, dsum
 
     vals = [c / 100.0 for c in cents]
     df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(parts)

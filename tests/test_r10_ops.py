@@ -102,7 +102,7 @@ def test_item_cooccurrence_matches_basket_counts(spark):
 
 
 def test_autocorr_matches_python_replay(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type",
@@ -228,7 +228,7 @@ def test_confusion_metrics_identities(spark):
 
 
 def test_twap_matches_python_replay(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type",
@@ -257,7 +257,7 @@ def test_twap_matches_python_replay(spark):
 
 
 def test_compaction_bins_match_packing_replay(spark):
-    from jigsaw_spark.plans.queries_r11 import _COMPACT_TARGET
+    from jigsaw_spark.plans.layout import _COMPACT_TARGET
 
     rows = entrymod.queries()["layout_compaction_bins"](spark, SF).collect()
     orders = spark.read.parquet(f"{SF}/orders.parquet").collect()

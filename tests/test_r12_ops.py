@@ -71,7 +71,7 @@ def test_kcore_matches_peeling_replay(spark):
 
 
 def test_column_profile_matches_recompute(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     rows = {
         r["col"]: r
@@ -103,7 +103,7 @@ def test_column_profile_matches_recompute(spark):
 
 
 def test_mann_whitney_matches_rank_replay(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type",

@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_percentile_exact_matches_nearest_rank(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type",

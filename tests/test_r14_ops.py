@@ -15,7 +15,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _daily_dollars(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type",
@@ -142,7 +142,7 @@ def test_theil_sen_matches_replay(spark):
 
 
 def test_markov_transitions_laws(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     rows = entrymod.queries()["rel_markov_transitions"](spark, SF).collect()
     ev = _t(spark, SF, "events").select(

@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _user_days(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "user_id",

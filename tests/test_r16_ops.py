@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_salted_distinct_equals_plain_distinct(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").collect()
     users = defaultdict(set)
@@ -57,8 +57,8 @@ def test_hierarchy_rollup_subtree_sums(spark):
 
 
 def test_sprt_walk_replay(spark):
-    from jigsaw_spark.plans.queries import _t
-    from jigsaw_spark.plans.queries_r16 import _SPRT_A, _SPRT_DN, _SPRT_UP
+    from jigsaw_spark.plans.registry import _t
+    from jigsaw_spark.plans.ab import _SPRT_A, _SPRT_DN, _SPRT_UP
 
     ev = _t(spark, SF, "events").select(
         "event_type",
@@ -118,7 +118,7 @@ def test_pr_curve_laws(spark):
 
 
 def test_rolling_origin_folds(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         F.unix_micros("ts").alias("x")

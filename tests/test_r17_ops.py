@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _events(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     return _t(spark, SF, "events").select(
         "event_type",
@@ -99,7 +99,7 @@ def test_dow_hour_matrix_anchor(spark):
 
 
 def test_m4_downsample_replay(spark):
-    from jigsaw_spark.plans.queries_r17 import _M4_W
+    from jigsaw_spark.plans.ts import _M4_W
 
     rows = _events(spark)
     series = defaultdict(list)

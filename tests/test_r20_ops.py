@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_lateness_audit_replay(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type", F.unix_micros("ts").alias("x"), "event_id"

@@ -48,7 +48,7 @@ def test_watermark_detect_replay(spark):
 
 
 def test_equidepth_hist_replay(spark):
-    from jigsaw_spark.plans.queries import _t
+    from jigsaw_spark.plans.registry import _t
 
     ev = _t(spark, SF, "events").select(
         "event_type",

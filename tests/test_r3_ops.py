@@ -117,7 +117,7 @@ def test_recursive_rollup_matches_closed_form(spark):
 def test_enriched_event_counts_batch_stream_parity(spark):
     """The same enrichment plan over a batch frame equals the AvailableNow
     drain (the oracle relies on this parity)."""
-    from jigsaw_spark.plans.queries_r3 import _EVENT_DIM, stream_static_join
+    from jigsaw_spark.plans.stream import _EVENT_DIM, stream_static_join
     from jigsaw_spark.session import load_table
     from jigsaw_spark.streaming.ingest import enriched_event_counts
 

@@ -286,7 +286,7 @@ def test_kendall_tau_replays(spark):
 
 def test_bootstrap_f1_replays(spark):
     events = spark.read.parquet(f"{SF}/events.parquet").collect()
-    from jigsaw_spark.plans.queries_r4 import _BOOT_B, _POIS_CDF
+    from jigsaw_spark.plans.agg import _BOOT_B, _POIS_CDF
 
     cents = [int(round(r["value"] * 100)) for r in events]
     lo, hi = min(cents), max(cents)

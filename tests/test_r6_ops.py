@@ -65,7 +65,7 @@ def test_dsir_weights_prefer_target_like_docs(spark):
 
 def test_incremental_merge_equals_single_pass(spark):
     """The algebraic-merge law: merged per-batch partials == one-pass agg."""
-    from jigsaw_spark.plans.queries_r6 import agg_incremental_merge
+    from jigsaw_spark.plans.agg import agg_incremental_merge
 
     sf = "/root/testdata/sf0.001"
     merged = {
@@ -101,7 +101,7 @@ def test_incremental_merge_equals_single_pass(spark):
 
 def test_zorder_interleaves_bits(spark):
     """Morton key: low x bits land on even positions, y bits on odd."""
-    from jigsaw_spark.plans.queries_r6 import _morton_sql
+    from jigsaw_spark.plans.layout import _morton_sql
 
     df = spark.createDataFrame(
         [(0, 0), (1, 0), (0, 1), (3, 5), (65535, 65535)], "xk long, yk long"
@@ -132,7 +132,7 @@ def test_zorder_improves_two_dim_locality(spark):
     better than bucketing by x alone bounds y — the file-skipping win."""
     import itertools
 
-    from jigsaw_spark.plans.queries_r6 import _morton_sql
+    from jigsaw_spark.plans.layout import _morton_sql
 
     pts = [(x, y) for x, y in itertools.product(range(64), range(64))]
     df = spark.createDataFrame(pts, "xk long, yk long").select(
@@ -155,7 +155,7 @@ def test_stream_lsh_dedup_blocks_known_near_dups(spark):
     accounted for, and blocked docs really share a band signature with
     the historical index."""
     from jigsaw_spark.operators.dedup import minhash_band_sigs
-    from jigsaw_spark.plans.queries_r6 import stream_lsh_dedup
+    from jigsaw_spark.plans.stream import stream_lsh_dedup
 
     sf = "/root/testdata/sf0.001"
     out = stream_lsh_dedup(spark, sf).collect()
@@ -183,7 +183,7 @@ def test_stream_lsh_dedup_blocks_known_near_dups(spark):
 def test_kanon_release_suppresses_small_cells(spark):
     """No released cell may be smaller than k; the '*' cell absorbs the
     rest and totals are conserved."""
-    from jigsaw_spark.plans.queries_r6 import _KANON, privacy_kanon_release
+    from jigsaw_spark.plans.privacy import _KANON, privacy_kanon_release
 
     sf = "/root/testdata/sf0.001"
     rows = privacy_kanon_release(spark, sf).collect()
@@ -198,7 +198,7 @@ def test_kanon_release_suppresses_small_cells(spark):
 def test_temporal_holdout_counts_leaky_users(spark):
     """Every event is in exactly one split; leaky-event counts are
     bounded by the split sizes and agree with a direct computation."""
-    from jigsaw_spark.plans.queries_r6 import p_temporal_holdout
+    from jigsaw_spark.plans.p import p_temporal_holdout
 
     sf = "/root/testdata/sf0.001"
     out = {r["split"]: r for r in p_temporal_holdout(spark, sf).collect()}
@@ -439,7 +439,7 @@ def test_kmv_intersect_estimates_jaccard(spark):
     Jaccard within the sketch's standard error (~1/sqrt(k))."""
     import math
 
-    from jigsaw_spark.plans.queries_r6 import _KMV_K, agg_kmv_intersect
+    from jigsaw_spark.plans.agg import _KMV_K, agg_kmv_intersect
     from jigsaw_spark.operators.text import tokens_expr
 
     sf = "/root/testdata/sf0.001"
@@ -468,7 +468,7 @@ def test_phash_near_dup_finds_perturbed_twins(spark):
     """Every perturbed twin pair (doc %40==20 vs its %40==0 sibling) must
     surface as a Hamming<=6 near-dup; identical-parameter pairs do not
     exist by construction, so hamming > 0 for twins."""
-    from jigsaw_spark.plans.queries_r6 import mm_phash_near_dup
+    from jigsaw_spark.plans.mm import mm_phash_near_dup
 
     sf = "/root/testdata/sf0.001"
     pairs = {

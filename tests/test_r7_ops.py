@@ -68,7 +68,7 @@ def test_bloom_prune_is_transparent_and_prunes(spark):
     """The bloom-pruned result must equal the plain semi-join (false
     positives die in the exact join), and the bit test must actually
     drop rows before the join."""
-    from jigsaw_spark.plans.queries_r7 import _BLOOM_K, _BLOOM_M  # noqa: F401
+    from jigsaw_spark.plans.rel import _BLOOM_K, _BLOOM_M  # noqa: F401
 
     q = entrymod.queries()["j8_bloom_prune"]
     got = {

@@ -31,7 +31,7 @@ def test_hilbert_stages_match_python_reference(spark):
     """The 8-stage SQL walk must equal the classic xy2d for every cell
     of a 32-point sample grid, and adjacent d values must be grid
     neighbors (the locality property Morton lacks)."""
-    from jigsaw_spark.plans.queries_r8 import _HIL_N, _hilbert_stage_exprs
+    from jigsaw_spark.plans.layout import _HIL_N, _hilbert_stage_exprs
 
     pts = [(x, y) for x in range(0, 256, 37) for y in range(0, 256, 41)]
     df = spark.createDataFrame(pts, "px int, py int").selectExpr(

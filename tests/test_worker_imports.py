@@ -1,8 +1,9 @@
-"""Which copy of jigsaw_spark a Python worker runs.
+"""Which copy of jigsaw_spark a Python worker runs, and whether every
+module imports on its own.
 
 Kernels reference module-level helpers (e.g. `dedup._simhash_batch`) that
 cloudpickle ships by reference, so the worker imports them itself. Each
-test starts its own driver in a subprocess: they change the working
+test starts its own interpreter in a subprocess: they change the working
 directory or the loaded package, which the shared test session must not
 see.
 """
@@ -10,6 +11,7 @@ see.
 from __future__ import annotations
 
 import os
+import pkgutil
 import shutil
 import subprocess
 import sys
@@ -86,3 +88,24 @@ def test_ab_side_kernels_run_that_sides_helpers(tmp_path):
     )
     assert proc.returncode != 0, "the working tree's kernel ran, not the side's"
     assert "side-copy kernel ran" in proc.stderr, proc.stderr[-3000:]
+
+
+def test_every_plans_module_imports_first():
+    """Any `jigsaw_spark.plans` module works as the first import of a fresh
+    interpreter: the registry is a leaf and no family module needs another
+    to be loaded before it."""
+    import jigsaw_spark.plans as plans
+
+    names = [m.name for m in pkgutil.iter_modules(plans.__path__)]
+    failed = {}
+    for name in names:
+        proc = subprocess.run(
+            [sys.executable, "-c", f"import jigsaw_spark.plans.{name}"],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        if proc.returncode != 0:
+            failed[name] = proc.stderr.strip().splitlines()[-1]
+    assert not failed, f"{len(failed)} of {len(names)} modules: {failed}"

@@ -173,7 +173,7 @@ PROBES = [
     "agg_weighted_median",
     "dq_embedding_norms",
     "layout_skipping_report",
-    # round 7 (queries_r27): the cumulative-dim rank pattern under fact
+    # round 7: the cumulative-dim rank pattern under fact
     # growth (lift deciles: dim = distinct cents, bounded; RFM monetary
     # axis = the BANDED rank — dim ~ |customers| grows x10, the hard
     # direction the r7 verdict flagged), cohort/funnel per-user
@@ -188,7 +188,7 @@ PROBES = [
     "ts_holt_winters_exact",
     "dq_mutual_information",
     "p_group_kfold",
-    # round 8 (queries_r28): scoring rules (one map+agg — flat-ish),
+    # round 8: scoring rules (one map+agg — flat-ish),
     # NDCG (per-type top-k windows; users per type grow x10 — the
     # partitioned-sort hard direction), KM (duration dim is
     # calendar-bounded), reconciliation (orders-keyed hash-agg + join),
@@ -236,7 +236,7 @@ PROBES = [
     "stream_sliding_wau",
     "ts_mase",
     "graph_random_walk",
-    # round 9 (queries_r41-r45): rerank rides the df-capped posting
+    # round 9: rerank rides the df-capped posting
     # pair join (text_tfidf_knn's curve) + bounded top-5 windows;
     # contamination is shingle hash-aggs + ONE key join (posting
     # densification makes it conservative, like tfidf); packing is
