@@ -35,12 +35,21 @@ def md5_key(*cols: Column | str, seed: str = "") -> Column:
     return F.md5(F.concat_ws("|", *parts))
 
 
-def det_hash(*cols: Column | str, seed: str = "") -> Column:
-    """64-bit unsigned-ish integer drawn from the md5 stream (first 15 hex
-    chars → bigint, always positive). Portable: DuckDB equivalent is
-    ``from_hex``-free ``strtol``-style conversion; we only use it where the
-    oracle can mirror it via row_number tricks."""
-    return F.conv(F.substring(md5_key(*cols, seed=seed), 1, 15), 16, 10).cast("bigint")
+def md5_int(digest: Column, chars: int) -> Column:
+    """The first ``chars`` hex chars of an md5 digest as a bigint.
+
+    ``chars`` <= 15 keeps the value positive (at most 60 bits). The DuckDB
+    twin is ``CAST(('0x' || substr(digest, 1, chars)) AS UBIGINT)``. A NULL
+    digest gives NULL."""
+    return F.conv(F.substring(digest, 1, chars), 16, 10).cast("bigint")
+
+
+def det_hash(*cols: Column | str, seed: str = "", chars: int = 15) -> Column:
+    """Integer drawn from the md5 stream: :func:`md5_int` over
+    :func:`md5_key`. The DuckDB twin is ``CAST(('0x' || substr(<md5_key_sql>,
+    1, chars)) AS UBIGINT)``; ``chars`` <= 15 keeps it positive. concat_ws
+    skips a NULL key, so a NULL key still hashes (to the seed alone)."""
+    return md5_int(md5_key(*cols, seed=seed), chars)
 
 
 def det_order(*cols: Column | str, seed: str = "") -> list[Column]:

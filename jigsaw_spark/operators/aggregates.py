@@ -214,22 +214,14 @@ def countmin_table(
     """
     from pyspark.sql import functions as F
 
-    from jigsaw_spark.functions.hashing import md5_key
+    from jigsaw_spark.functions.hashing import det_hash
 
     d = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("d")
     cols = [F.col("term"), d] + ([F.col(weight)] if weight else [])
     cells = toks.select(*cols).select(
         "d",
         F.pmod(
-            F.conv(
-                F.substring(
-                    md5_key(F.concat_ws("|", F.col("d"), F.col("term")), seed=seed),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
+            det_hash(F.concat_ws("|", F.col("d"), F.col("term")), seed=seed, chars=12),
             F.lit(width),
         ).alias("cell"),
         *([F.col(weight)] if weight else []),
@@ -247,22 +239,14 @@ def countmin_estimate(candidates, cms, depth: int = 4, width: int = 256, seed: s
     depth x width rows -> broadcast; the probe is a map-side join."""
     from pyspark.sql import functions as F
 
-    from jigsaw_spark.functions.hashing import md5_key
+    from jigsaw_spark.functions.hashing import det_hash
 
     d = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("d")
     probes = candidates.select(F.col("term"), d).select(
         "term",
         "d",
         F.pmod(
-            F.conv(
-                F.substring(
-                    md5_key(F.concat_ws("|", F.col("d"), F.col("term")), seed=seed),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
+            det_hash(F.concat_ws("|", F.col("d"), F.col("term")), seed=seed, chars=12),
             F.lit(width),
         ).alias("cell"),
     )

@@ -165,18 +165,13 @@ def hash_features(
       idx  = uint48(md5(seed|col=value)[0:12]) % dims
       sign = +1 if hexdigit 13 is even else -1
     """
-    from jigsaw_spark.functions.hashing import md5_key
+    from jigsaw_spark.functions.hashing import md5_int, md5_key
 
     toks = [
         md5_key(F.concat_ws("=", F.lit(c), F.col(c).cast("string")), seed=seed)
         for c in cols
     ]
-    idxs = [
-        F.pmod(
-            F.conv(F.substring(t, 1, 12), 16, 10).cast("bigint"), F.lit(dims)
-        )
-        for t in toks
-    ]
+    idxs = [F.pmod(md5_int(t, 12), F.lit(dims)) for t in toks]
     signs = [
         F.when(
             F.conv(F.substring(t, 13, 1), 16, 10).cast("int") % 2 == 0,

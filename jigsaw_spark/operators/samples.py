@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jigsaw_spark.functions.hashing import det_order, md5_key
+from jigsaw_spark.functions.hashing import det_hash, det_order, md5_int, md5_key
 
 
 def exact_sample(
@@ -73,10 +73,7 @@ def weighted_sample(
     the full input — same physical plan as exact_sample. Portable: the
     oracle reproduces u from the same md5 hex prefix bit-for-bit."""
     u = (
-        F.conv(F.substring(md5_key(*key_cols, seed=seed), 1, 12), 16, 10).cast(
-            "double"
-        )
-        + F.lit(1.0)
+        det_hash(*key_cols, seed=seed, chars=12).cast("double") + F.lit(1.0)
     ) / F.lit(float(16**12))
     # round the rank key: JVM and other engines' libm log() may differ in
     # the last ULP, which could flip membership at the top-N boundary; 12
@@ -216,7 +213,7 @@ def approx_split(
     """Scale-path split: hash-threshold on md5(key) — no global rank, no
     shuffle, fully parallel; counts are binomial around n·fraction."""
     # first 8 hex chars → uniform 32-bit int
-    bucket = F.conv(F.substring(md5_key(*key_cols, seed=seed), 1, 8), 16, 10).cast("bigint")
+    bucket = det_hash(*key_cols, seed=seed, chars=8)
     pred = bucket < F.lit(int(test_fraction * 0xFFFFFFFF))
     return df.filter(pred), df.filter(~pred)
 
@@ -256,7 +253,7 @@ def kfold_assign(
 
 def kfold_hash(df: DataFrame, k: int, key_cols: list[str], seed: str = "kfold-0") -> DataFrame:
     """Scale-path fold assignment: pmod(md5-int, k); parallel, near-equal folds."""
-    bucket = F.conv(F.substring(md5_key(*key_cols, seed=seed), 1, 15), 16, 10).cast("bigint")
+    bucket = det_hash(*key_cols, seed=seed)
     return df.withColumn("fold", F.pmod(bucket, F.lit(k)).cast("int"))
 
 
@@ -354,7 +351,7 @@ def dsir_gram_buckets(
     ).select(
         *keep,
         F.pmod(
-            F.conv(F.substring(F.md5("gram"), 1, 12), 16, 10).cast("bigint"),
+            md5_int(F.md5("gram"), 12),
             F.lit(buckets),
         ).alias("bucket"),
     )

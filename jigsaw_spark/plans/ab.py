@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from jigsaw_spark.functions.hashing import det_hash, md5_int
 from jigsaw_spark.plans.registry import _t, register
 
 
@@ -131,19 +132,12 @@ def ab_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arm = F.when(
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("ab-arm|"), F.col("user_id").cast("string")
-                        )
-                    ),
-                    1,
-                    12,
+            md5_int(
+                F.md5(
+                    F.concat(F.lit("ab-arm|"), F.col("user_id").cast("string"))
                 ),
-                16,
-                10,
-            ).cast("bigint"),
+                12,
+            ),
             F.lit(2),
         )
         == 0,
@@ -697,18 +691,9 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposure = ev.select("event_type", "user_id").distinct()
     armed = exposure.select(
         "event_type",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit("srm"), F.col("user_id"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(2),
-        ).alias("arm"),
+        F.pmod(det_hash("user_id", seed="srm", chars=12), F.lit(2)).alias(
+            "arm"
+        ),
     )
     c = armed.groupBy("event_type").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
@@ -784,20 +769,7 @@ _POWER_SQL = """
 )
 def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    arm = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws("|", F.lit("power"), F.col("event_id"))
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(2),
-    )
+    arm = F.pmod(det_hash("event_id", seed="power"), F.lit(2))
     s = ev.select(
         arm.alias("arm"),
         F.when(F.col("event_type") == "purchase", 1)

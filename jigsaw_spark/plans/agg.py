@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from jigsaw_spark.functions.hashing import det_hash, md5_int, md5_key
 from jigsaw_spark.operators.aggregates import (
     dense_label_map,
     distinct_labels,
@@ -1287,12 +1288,34 @@ _POIS_CDF = [
 
 _BOOT_B = 16
 
+# byte -> Poisson weight: the same function of the digest byte as the
+# oracle's CDF CASE ladder (wt = min k with byte/256 < CDF[k], else 7)
+_POIS_LUT = [
+    next((k for k, c in enumerate(_POIS_CDF) if byte / 256.0 < c), 7)
+    for byte in range(256)
+]
+
 
 def _pois_case_sql(u: str) -> str:
     parts = [
         f"WHEN {u} < {c} THEN {k}" for k, c in enumerate(_POIS_CDF)
     ]
     return "CASE " + " ".join(parts) + " ELSE 7 END"
+
+
+def _pois_weights(h: Column) -> list[Column]:
+    """The _BOOT_B replicate weights of one md5 hex digest ``h``: replicate
+    b reads its own 2-hex slice as a byte and looks it up in ONE shared
+    256-entry literal LUT (256 levels are plenty for the CDF ladder and
+    cut the hash work x20; _BOOT_B array lookups codegen far smaller than
+    _BOOT_B eight-branch CASE chains)."""
+    lut = F.array(*[F.lit(w) for w in _POIS_LUT])
+    return [
+        F.element_at(
+            lut, F.conv(F.substring(h, 2 * b + 1, 2), 16, 10).cast("int") + 1
+        )
+        for b in range(_BOOT_B)
+    ]
 
 
 @register(
@@ -1329,39 +1352,16 @@ def _pois_case_sql(u: str) -> str:
     "expansion the flat form avoids",
 )
 def agg_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.functions.hashing import md5_key
-
     orders = _t(spark, sf_dir, "orders")
-    # ONE md5 per row; each replica reads its own 2-hex slice of the
-    # digest (256 quantization levels are plenty for the CDF ladder and
-    # cut the hash work x20)
+    # ONE md5 per row; each replica reads its own 2-hex slice of it
     base = orders.select(
         dec2("o_totalprice", 18).alias("p"),
         md5_key(
             F.concat_ws("|", F.lit("boot"), F.col("o_orderkey").cast("string"))
         ).alias("h"),
     )
-    # byte -> Poisson weight as ONE shared 256-entry literal LUT: the
-    # same function of the digest byte as the oracle's CDF CASE ladder
-    # (wt = min k with byte/256 < CDF[k], else 7), but 32 array lookups
-    # codegen far smaller than 32 eight-branch CASE chains
-    lut = F.array(
-        *[
-            F.lit(
-                next(
-                    (k for k, c in enumerate(_POIS_CDF) if byte / 256.0 < c),
-                    7,
-                )
-            )
-            for byte in range(256)
-        ]
-    )
     aggs = []
-    for b in range(_BOOT_B):
-        byte = F.conv(F.substring(F.col("h"), 2 * b + 1, 2), 16, 10).cast(
-            "int"
-        )
-        wt = F.element_at(lut, byte + 1)
+    for b, wt in enumerate(_pois_weights(F.col("h"))):
         aggs.append(F.sum(wt * F.col("p")).alias(f"s{b}"))
         aggs.append(F.sum(wt).alias(f"n{b}"))
     row = base.agg(*aggs)
@@ -1620,9 +1620,7 @@ def agg_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(
             "source",
-            F.conv(F.substring(F.md5("tok"), 1, 12), 16, 10)
-            .cast("bigint")
-            .alias("h"),
+            md5_int(F.md5("tok"), 12).alias("h"),
         )
         .distinct()
     )
@@ -2316,19 +2314,10 @@ def agg_quantile_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("qsk|"), F.col("event_id").cast("string"))
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("pri"),
+        md5_int(
+            F.md5(F.concat(F.lit("qsk|"), F.col("event_id").cast("string"))),
+            12,
+        ).alias("pri"),
     )
     pdim = F.broadcast(
         spark.createDataFrame([(p,) for p in _QSK_PCTS], "p int")
@@ -2454,22 +2443,7 @@ def agg_cms_width_curve(
         "user_id",
         "cnt",
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col("j").cast("string"),
-                            F.col("user_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.col("w").cast("bigint"),
+            det_hash("j", "user_id", chars=12), F.col("w").cast("bigint")
         ).alias("cell"),
     )
     cells = keyed.groupBy("w", "j", "cell").agg(
@@ -2571,21 +2545,7 @@ def agg_kmv_precision_curve(
     hashed = du.select(
         "event_type",
         "user_id",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit("kmv"), F.col("user_id").cast("string")
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        det_hash("user_id", seed="kmv", chars=12).alias("h"),
     )
     w = Window.partitionBy("event_type").orderBy("h", "user_id")
     ranked = hashed.withColumn("rk", F.row_number().over(w))

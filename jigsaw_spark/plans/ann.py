@@ -1175,7 +1175,7 @@ def ann_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # running count of arm members over the ONE total order
     # (round(cos,9) desc, vec_id) — identical to row_number over the
     # filtered arm because candidates are unique per (query, vec) —
-    # so one window pass + one aggregate replace the 3 per-arm
+    # so one window pass + two 1-row aggregates replace the 3 per-arm
     # windows, 3 truth joins and 6 count jobs
     wopen = (
         Window.partitionBy("query_id")
@@ -1200,13 +1200,17 @@ def ann_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             for np_ in _NPROBES
         ],
     )
-    row = ranked.join(tmark, ["query_id", "vec_id"], "left").agg(
+    # n_scored counts candidates BEFORE the truth join (as
+    # ann_pareto_frontier does), so it never depends on truth's rows
+    n_scored_row = scored_all.agg(
         *[
             F.sum(F.when(F.col("probe_rank") <= np_, 1).otherwise(0))
             .cast("bigint")
             .alias(f"ns{np_}")
             for np_ in _NPROBES
-        ],
+        ]
+    )
+    hits_row = ranked.join(tmark, ["query_id", "vec_id"], "left").agg(
         *[
             F.sum(
                 F.when(
@@ -1219,8 +1223,9 @@ def ann_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias(f"h{np_}")
             for np_ in _NPROBES
-        ],
+        ]
     )
+    row = hits_row.crossJoin(F.broadcast(n_scored_row))
     out = row.select(
         F.explode(
             F.array(

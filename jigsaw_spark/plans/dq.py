@@ -12,9 +12,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from jigsaw_spark.functions.hashing import det_hash
 from jigsaw_spark.plans.dedup import _KEEPER_EDGES_CTE
 from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, mm_phash_near_dup
 from jigsaw_spark.plans.registry import QUERIES, _t, register
+
+
+def _holdout_col(doc_id="doc_id"):
+    """The 'contam|' md5 5% holdout flag shared by the contamination
+    family (doc-level md5 stream, 12 hex chars, mod 20). ``doc_id``
+    may be a column name or a Column (e.g. a lambda element var, so
+    the flag can evaluate inside array expressions)."""
+    return F.pmod(det_hash(doc_id, seed="contam", chars=12), F.lit(20)) == 0
+
+
+_HOLDOUT_SQL = """CAST(CAST(('0x' || substr(md5('contam|'
+               || CAST({d} AS VARCHAR)), 1, 12)) AS UBIGINT)
+               % CAST(20 AS UBIGINT) AS BIGINT) = 0"""
 
 
 _PROFILE_COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
@@ -931,10 +945,6 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = []
     for tbl, key in _CK_KEYS:
         df = _t(spark, sf_dir, tbl)
-        h = F.expr(
-            f"CAST(conv(substring(md5({key}), 1, 12), 16, 10) "
-            "AS DECIMAL(38,0))"
-        )
         frames.append(
             df.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1292,25 +1302,7 @@ def dq_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = docs.select(
         "doc_id",
         "text",
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("contam"), F.col("doc_id")
-                            )
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(20),
-            )
-            == 0
-        ).alias("is_holdout"),
+        _holdout_col().alias("is_holdout"),
     )
     # ONE (sh) hash-agg (holdout-doc set + train-presence per distinct
     # gram), exploded back and re-aggregated per doc — replaces the two
@@ -1658,18 +1650,7 @@ def dq_decontam_skipgram(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_expr("text").alias("t"),
         (
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws("|", F.lit("decon"), F.col("doc_id"))
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(_DECON_MOD),
+                det_hash("doc_id", seed="decon", chars=12), F.lit(_DECON_MOD)
             )
             == 0
         ).alias("is_eval"),
@@ -2001,25 +1982,7 @@ def dq_contamination_by_source(
         "doc_id",
         "source",
         "text",
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("contam"), F.col("doc_id")
-                            )
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(20),
-            )
-            == 0
-        ).alias("is_holdout"),
+        _holdout_col().alias("is_holdout"),
     )
     # checkpoint the TOKENIZED rows, not the 8-gram explode: the explode
     # is ~|tokens| rows (x8 text volume) and materializing it at 100 TB
@@ -2313,25 +2276,7 @@ def dq_split_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(alnum_ratio_expr("text") * 1000, 0)
         .cast("bigint")
         .alias("c_alnum"),
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("contam"), F.col("doc_id")
-                            )
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(20),
-            )
-            == 0
-        ).alias("is_holdout"),
+        _holdout_col().alias("is_holdout"),
     ).localCheckpoint()
 
     def arm(name: str, col: str) -> DataFrame:
@@ -2473,25 +2418,7 @@ def dq_contamination_ngram_curve(
     docs = widen(_t(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("contam"), F.col("doc_id")
-                            )
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(20),
-            )
-            == 0
-        ).alias("is_holdout"),
+        _holdout_col().alias("is_holdout"),
         tokens_expr("text").alias("t"),
     ).localCheckpoint()
 
@@ -2674,25 +2601,7 @@ def dq_contamination_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         "n_chars",
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("contam"), F.col("doc_id")
-                            )
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(20),
-            )
-            == 0
-        ).alias("is_holdout"),
+        _holdout_col().alias("is_holdout"),
     )
     toks = split.select(
         "doc_id",
@@ -2965,25 +2874,7 @@ def dq_split_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = docs.select(
         "doc_id",
         "source",
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", F.lit("contam"), F.col("doc_id")
-                            )
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(20),
-            )
-            == 0
-        ).alias("is_holdout"),
+        _holdout_col().alias("is_holdout"),
         tokens_expr("text").alias("t"),
     ).localCheckpoint()
     # one (sh) hash-agg over raw gram instances (set semantics subsume
@@ -2991,19 +2882,6 @@ def dq_split_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flag on the doc array, then one (doc) agg carrying BOTH the
     # contamination flag and the max posting df — no split joins, no
     # semi-join chain, no gram-keyed self-join (guide §2.3/§2.4)
-    holdout_of = lambda d: (  # noqa: E731 — the certified flag, per element
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit("contam"), d)), 1, 12
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(20),
-        )
-        == 0
-    )
     per_doc = (
         split.select(
             "doc_id", F.explode(shingles_expr("t", 8)).alias("sh")
@@ -3012,7 +2890,7 @@ def dq_split_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_set("doc_id").alias("_ds"))
         .select(
             F.size("_ds").cast("bigint").alias("df"),
-            F.exists("_ds", lambda d: ~holdout_of(d)).alias("_ht"),
+            F.exists("_ds", lambda d: ~_holdout_col(d)).alias("_ht"),
             F.explode("_ds").alias("doc_id"),
         )
         .groupBy("doc_id")
@@ -3195,23 +3073,7 @@ def dq_repair_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.session import widen
 
     docs = widen(_t(spark, sf_dir, "documents"))
-    hold = (
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("|", F.lit("contam"), F.col("doc_id"))
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(20),
-        )
-        == 0
-    )
+    hold = _holdout_col()
     split = docs.select("doc_id", "source", hold.alias("is_holdout"))
 
     def _grams(frame: DataFrame, *extra: str) -> DataFrame:
@@ -3236,30 +3098,11 @@ def dq_repair_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     g0 = (
         _grams(docs)
         .groupBy("sh")
-        # ONE collect_set: the holdout flag is a pure md5 expression of
-        # doc_id, so the per-gram holdout subset derives by FILTERING
-        # the doc array post-agg (r14, the dq_repair_fixpoint form)
-        .agg(F.collect_set("doc_id").alias("_ds"))
-        .withColumn(
-            "hd0",
-            F.filter(
-                F.col("_ds"),
-                lambda d: F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws("|", F.lit("contam"), d)
-                            ),
-                            1,
-                            12,
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint"),
-                    F.lit(20),
-                )
-                == 0,
-            ),
+        .agg(
+            F.collect_set("doc_id").alias("_ds"),
+            F.collect_set(
+                F.when(F.col("h0"), F.col("doc_id"))
+            ).alias("hd0"),
         )
         .withColumn("nt0", F.size("_ds") - F.size("hd0"))
         .localCheckpoint()
@@ -3547,27 +3390,7 @@ def dq_split_cluster_leakage(
         .select(
             "doc_id",
             F.coalesce("c0", F.col("keeper")).alias("cluster"),
-            (
-                F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    "|",
-                                    F.lit("contam"),
-                                    F.col("doc_id"),
-                                )
-                            ),
-                            1,
-                            12,
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint"),
-                    F.lit(20),
-                )
-                == 0
-            ).alias("is_holdout"),
+            _holdout_col().alias("is_holdout"),
         )
     )
     cl = lab.groupBy("cluster").agg(
@@ -3614,34 +3437,6 @@ def dq_split_cluster_leakage(
             ).alias("leak_milli"),
         )
     )
-
-
-def _holdout_col(doc_id="doc_id"):
-    """The 'contam|' md5 5% holdout flag shared by the contamination
-    family (doc-level md5 stream, 12 hex chars, mod 20). ``doc_id``
-    may be a column name or a Column (e.g. a lambda element var, so
-    the flag can evaluate inside array expressions)."""
-    c = F.col(doc_id) if isinstance(doc_id, str) else doc_id
-    return (
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit("contam"), c)),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(20),
-        )
-        == 0
-    )
-
-
-_HOLDOUT_SQL = """CAST(CAST(('0x' || substr(md5('contam|'
-               || CAST({d} AS VARCHAR)), 1, 12)) AS UBIGINT)
-               % CAST(20 AS UBIGINT) AS BIGINT) = 0"""
 
 
 # ---------------------------------------------------------------------------
@@ -4062,13 +3857,11 @@ def dq_repair_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     g0 = (
         _grams(docs)
         .groupBy("sh")
-        # ONE collect_set: the holdout flag is a pure md5 expression of
-        # doc_id, so the per-gram holdout subset derives by FILTERING
-        # the doc array post-agg — the agg buffer and its shuffle
-        # partials carry one set instead of two overlapping ones (r14)
-        .agg(F.collect_set("doc_id").alias("_ds"))
-        .withColumn(
-            "hd0", F.filter(F.col("_ds"), lambda d: _holdout_col(d))
+        .agg(
+            F.collect_set("doc_id").alias("_ds"),
+            F.collect_set(
+                F.when(F.col("h0"), F.col("doc_id"))
+            ).alias("hd0"),
         )
         # distinct train docs = distinct docs minus distinct holdout docs
         .withColumn("nt0", F.size("_ds") - F.size("hd0"))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jigsaw_spark.plans.registry import _t
+
 PANEL_SIZE = 200
 PANEL_K = 10
 
@@ -43,15 +45,11 @@ PANEL_TOPK_CTE = f"""
       FROM ranked_all WHERE rank <= {PANEL_K})"""
 
 
-def labeled_panel_topk(
-    spark: SparkSession, sf_dir: str, load_table
-) -> DataFrame:
-    """(query_id, qlabel, clabel, rank) for the panel's top-10 candidates.
-
-    ``load_table`` is the caller's ``_t``-style loader."""
+def labeled_panel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, qlabel, clabel, rank) for the panel's top-10 candidates."""
     from jigsaw_spark.operators.similarity import cosine_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     panel = emb.filter(F.col("vec_id") < PANEL_SIZE)
     top = cosine_topk(emb, panel, k=PANEL_K).select(
         "query_id", "vec_id", "rank"

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jigsaw_spark.functions.hashing import md5_int
 from jigsaw_spark.operators.text import tokens_sql
 from jigsaw_spark.plans.registry import _t, register
 
@@ -975,19 +976,10 @@ def fn_ip_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     h = cust.select(
         "c_custkey",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("ip|"), F.col("c_custkey").cast("string"))
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("hv"),
+        md5_int(
+            F.md5(F.concat(F.lit("ip|"), F.col("c_custkey").cast("string"))),
+            12,
+        ).alias("hv"),
     )
     ips = h.select(
         "c_custkey",

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jigsaw_spark.functions.hashing import md5_int
 from jigsaw_spark.plans.registry import _t, register
 
 
@@ -251,19 +252,14 @@ def layout_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         cents.alias("cents"),
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("file|"), F.col("o_orderkey").cast("string")
-                        )
-                    ),
-                    1,
-                    12,
+            md5_int(
+                F.md5(
+                    F.concat(
+                        F.lit("file|"), F.col("o_orderkey").cast("string")
+                    )
                 ),
-                16,
-                10,
-            ).cast("bigint"),
+                12,
+            ),
             F.lit(64),
         ).alias("file_id"),
     )
@@ -357,20 +353,14 @@ def layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = orders.groupBy(
         F.col("o_orderpriority").alias("part"),
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("cfile|"),
-                            F.col("o_orderkey").cast("string"),
-                        )
-                    ),
-                    1,
-                    12,
+            md5_int(
+                F.md5(
+                    F.concat(
+                        F.lit("cfile|"), F.col("o_orderkey").cast("string")
+                    )
                 ),
-                16,
-                10,
-            ).cast("bigint"),
+                12,
+            ),
             F.lit(128),
         ).alias("file_id"),
     ).agg((F.count(F.lit(1)) * 100).alias("bytes"))

@@ -22,8 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jigsaw_spark.plans.agg import _BOOT_B, _POIS_CDF, _pois_case_sql
-from jigsaw_spark.plans.eval_panel import PANEL_TOPK_CTE
+from jigsaw_spark.functions.hashing import det_hash, md5_int, md5_key
+from jigsaw_spark.plans.agg import _BOOT_B, _pois_case_sql, _pois_weights
+from jigsaw_spark.plans.eval_panel import PANEL_TOPK_CTE, labeled_panel_topk
 from jigsaw_spark.plans.registry import QUERIES, _TDIV, _t, register
 from jigsaw_spark.plans.rel import _exact_rank
 
@@ -1768,7 +1769,6 @@ def _lc_sql() -> str:
     "loop consults; all heavy work is the single gram explode",
 )
 def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.functions.hashing import md5_key
     from jigsaw_spark.operators.samples import dsir_gram_buckets
 
     docs = _t(spark, sf_dir, "documents")
@@ -3069,15 +3069,7 @@ def ml_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     hashed = vocab.select(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("feat|"), F.col("term"))), 1, 12
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h")
+        md5_int(F.md5(F.concat(F.lit("feat|"), F.col("term"))), 12).alias("h")
     )
     ks = spark.createDataFrame([(8,), (12,), (16,)], "k int")
     b = hashed.crossJoin(F.broadcast(ks)).select(
@@ -3884,10 +3876,8 @@ _MRR_SQL = f"""
     "label-dim-sized",
 )
 def ml_mrr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.plans.eval_panel import labeled_panel_topk
-
     hits = (
-        labeled_panel_topk(spark, sf_dir, _t)
+        labeled_panel_topk(spark, sf_dir)
         .groupBy("query_id", "qlabel")
         .agg(
             F.min(
@@ -4508,9 +4498,7 @@ _P_AT_K_SQL = f"""
     "3-row k dim joined on rank <= k, then a (label x 3)-dim rollup",
 )
 def ml_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.plans.eval_panel import labeled_panel_topk
-
-    ranked = labeled_panel_topk(spark, sf_dir, _t).select(
+    ranked = labeled_panel_topk(spark, sf_dir).select(
         "query_id",
         "qlabel",
         F.when(F.col("clabel") == F.col("qlabel"), 1)
@@ -4771,14 +4759,12 @@ _RECALL_SQL = f"""
     "rollup",
 )
 def ml_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.plans.eval_panel import labeled_panel_topk
-
     emb = _t(spark, sf_dir, "embeddings")
     lbl = emb.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_label")
     )
     ks = F.broadcast(spark.createDataFrame([(5,), (10,)], "k int"))
-    ranked = labeled_panel_topk(spark, sf_dir, _t)
+    ranked = labeled_panel_topk(spark, sf_dir)
     perq = (
         ranked.join(ks, ranked["rank"] <= ks["k"])
         .groupBy("query_id", "qlabel", "k")
@@ -5651,8 +5637,6 @@ def _bootstrap_f1_sql() -> str:
     "those 16 bounded rows",
 )
 def ml_bootstrap_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.functions.hashing import md5_key
-
     ev = _t(spark, sf_dir, "events")
     s = ev.select(
         "event_id",
@@ -5671,17 +5655,6 @@ def ml_bootstrap_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws("|", F.lit("bootf1"), F.col("event_id").cast("string"))
         ).alias("h"),
     )
-    lut = F.array(
-        *[
-            F.lit(
-                next(
-                    (k for k, c in enumerate(_POIS_CDF) if byte / 256.0 < c),
-                    7,
-                )
-            )
-            for byte in range(256)
-        ]
-    )
     # hoist each replicate's weight into ONE projected column before the
     # aggregate (the SCALE.md §7 node2vec lesson): the tp/fp/fn
     # conditionals then reference wt{b} instead of re-deriving the
@@ -5692,13 +5665,8 @@ def ml_bootstrap_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "pred",
         *[
-            F.element_at(
-                lut,
-                F.conv(F.substring(F.col("h"), 2 * b + 1, 2), 16, 10)
-                .cast("int")
-                + 1,
-            ).alias(f"wt{b}")
-            for b in range(_BOOT_B)
+            wt.alias(f"wt{b}")
+            for b, wt in enumerate(_pois_weights(F.col("h")))
         ],
     )
     aggs = []
@@ -5838,22 +5806,7 @@ def ml_fold_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(2 * F.col("cum") >= F.col("n"))
         .agg(F.min("cents").alias("m"))
     )
-    fold = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit("foldstab"), F.col("event_id")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(5),
-    )
+    fold = F.pmod(det_hash("event_id", seed="foldstab"), F.lit(5))
     scored = s.crossJoin(F.broadcast(med)).select(
         fold.alias("fold"),
         F.when(

@@ -12,7 +12,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jigsaw_spark.functions.hashing import md5_key, md5_key_sql
+from jigsaw_spark.functions.hashing import (
+    det_hash,
+    md5_int,
+    md5_key,
+    md5_key_sql,
+)
 from jigsaw_spark.operators.filters import and_filter, or_filter
 from jigsaw_spark.operators.joins import union_distinct
 from jigsaw_spark.operators.samples import (
@@ -409,13 +414,9 @@ def p_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partition-independent, ~20% of groups to test",
 )
 def p_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.functions.hashing import md5_key
-
     docs = _t(spark, sf_dir, "documents")
     bucket = F.pmod(
-        F.conv(F.substring(md5_key("source", seed="gsplit-42"), 1, 12), 16, 10)
-        .cast("bigint"),
-        F.lit(1000),
+        det_hash("source", seed="gsplit-42", chars=12), F.lit(1000)
     )
     return docs.select(
         "doc_id",
@@ -507,15 +508,10 @@ def p_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     w = dsir_weights(docs, "doc_id", F.col("lang") == "en", buckets=_DSIR_B)
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dsir-resample|"), F.col("doc_id").cast("string"))),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.md5(F.concat(F.lit("dsir-resample|"), F.col("doc_id").cast("string"))),
+            12,
+        )
         + 1
     ) / (281474976710656.0 + 1)  # (0,1] from 48 md5 bits
     gumbel_micro = F.round(-F.log(-F.log(u)) * 1e6).cast("bigint")
@@ -704,8 +700,6 @@ _SKF_SQL = f"""
     "parallel at any scale, no local/distributed strategy switch needed",
 )
 def p_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.functions.hashing import md5_key
-
     docs = _t(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(
         md5_key(F.col("doc_id"), seed="skfold"), "doc_id"
@@ -826,17 +820,7 @@ def p_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "i",
             F.pmod(
-                F.conv(
-                    F.substring(
-                        md5_key(
-                            F.col("doc_id"), F.col("i"), seed="negsamp"
-                        ),
-                        1,
-                        12,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
+                det_hash("doc_id", "i", seed="negsamp", chars=12),
                 F.col("mx") + 1,
             ).alias("neg_id"),
         )
@@ -1093,14 +1077,7 @@ def p_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("keeper").cast("bigint").alias("keeper"),
         F.when(
-            F.pmod(
-                F.conv(
-                    F.substring(md5_key(F.col("keeper"), seed="lss"), 1, 12),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(10),
-            )
+            F.pmod(det_hash("keeper", seed="lss", chars=12), F.lit(10))
             < 8,
             "train",
         )
@@ -1165,14 +1142,7 @@ def p_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.select(
         "doc_id",
         F.col("keeper").cast("bigint").alias("keeper"),
-        F.pmod(
-            F.conv(
-                F.substring(md5_key(F.col("keeper"), seed="gkf"), 1, 12),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(5),
-        )
+        F.pmod(det_hash("keeper", seed="gkf", chars=12), F.lit(5))
         .cast("int")
         .alias("fold"),
     )
@@ -1549,20 +1519,7 @@ def p_epoch_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sharded = docs.select(
         "doc_id",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("|", F.lit("shard"), F.col("doc_id"))
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(8),
-        )
+        F.pmod(det_hash("doc_id", seed="shard", chars=12), F.lit(8))
         .cast("int")
         .alias("shard"),
         key("ep1").alias("k1"),
@@ -1870,18 +1827,7 @@ def p_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.text import tokens_expr
 
     docs = _t(spark, sf_dir, "documents")
-    shard = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit("shard"), F.col("doc_id"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(8),
-    )
+    shard = F.pmod(det_hash("doc_id", seed="shard"), F.lit(8))
     s = docs.select(
         shard.alias("shard"),
         F.size(tokens_expr("text")).cast("bigint").alias("toks"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from jigsaw_spark.functions.hashing import det_hash
 from jigsaw_spark.plans.registry import _t, register
 
 
@@ -286,15 +287,7 @@ def privacy_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         (
             2
-            * F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit("dp-eps1"), "event_type")),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            * det_hash("event_type", seed="dp-eps1", chars=12)
             + 1
             - F.lit(_TWO48)
         ).alias("s"),

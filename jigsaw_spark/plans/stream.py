@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from jigsaw_spark.operators.text import tokens_sql
 from jigsaw_spark.plans.curation import _DSIR_B
+from jigsaw_spark.plans.dq import _holdout_col
 from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, _phash_images, _synth_images
 from jigsaw_spark.plans.registry import _t, dec2, dsum, register
 from jigsaw_spark.streaming.ingest import read_event_stream, windowed_event_counts
@@ -979,23 +980,7 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.text import shingles_expr, tokens_expr
     from jigsaw_spark.streaming.ingest import read_document_stream
 
-    is_holdout = (
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("|", F.lit("contam"), F.col("doc_id"))
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(20),
-        )
-        == 0
-    )
+    is_holdout = _holdout_col()
 
     from jigsaw_spark.session import widen
 

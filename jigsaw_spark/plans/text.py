@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from jigsaw_spark.functions.hashing import det_hash, md5_int
 from jigsaw_spark.operators.dedup import edit_distance_pairs
 from jigsaw_spark.operators.text import (
     alnum_ratio_expr,
@@ -768,19 +769,8 @@ def rag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = chunk_documents(docs, "doc_id", chunk_size=32, overlap=0)
     dims = [
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|", F.lit("rag"), F.lit(str(k)), "chunk_text"
-                        )
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("double")
+            det_hash(F.lit(str(k)), "chunk_text", seed="rag", chars=12)
+            .cast("double")
             / F.lit(float(16**12))
             * 2
             - 1
@@ -2258,17 +2248,9 @@ def packed_cum(docs: DataFrame) -> DataFrame:
         "doc_id",
         "lang",
         F.size(tokens_expr("text")).cast("bigint").alias("n_tok"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("pack|"), F.col("doc_id").cast("string"))),
-                1,
-                12,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("pri"),
+        md5_int(
+            F.md5(F.concat(F.lit("pack|"), F.col("doc_id").cast("string"))), 12
+        ).alias("pri"),
     ).filter(F.col("n_tok") > 0)
     sharded = sized.withColumn(
         "shard", F.pmod(F.col("pri"), F.lit(_PACK_SHARDS)).cast("int")
