@@ -49,11 +49,18 @@ def exact_sample(
 
     If the key is not unique, pass ``tiebreak_cols`` covering the remaining
     output columns so the order is total — otherwise the membership of the
-    boundary row is engine-dependent."""
-    order = det_order(*key_cols, seed=seed)
-    if tiebreak_cols:
-        order += [F.col(c).asc() for c in tiebreak_cols]
-    return df.orderBy(*order).limit(n)
+    boundary row is engine-dependent.
+
+    The md5 sort key is projected once per row into a temporary column,
+    so the top-N sort compares attributes instead of hashing the key on
+    every comparison. The order is :func:`det_order`'s."""
+    order = [F.col(c) for c in ("_xs_hk", *key_cols, *(tiebreak_cols or ()))]
+    return (
+        df.withColumn("_xs_hk", md5_key(*key_cols, seed=seed))
+        .orderBy(*order)
+        .limit(n)
+        .drop("_xs_hk")
+    )
 
 
 def weighted_sample(
@@ -112,6 +119,17 @@ def stratified_sample(
     )
 
 
+def _max_rows(df: DataFrame) -> int | None:
+    """Catalyst's static upper bound on the rows of ``df``'s analyzed plan,
+    or None when the plan has no bound (or the session exposes no JVM
+    plan)."""
+    try:
+        bound = df._jdf.queryExecution().analyzed().maxRows()
+    except Exception:
+        return None
+    return int(bound.get()) if bound.isDefined() else None
+
+
 def _ranked(
     df: DataFrame,
     key_cols: list[str],
@@ -135,14 +153,16 @@ def _ranked(
       the offset join is a broadcast; the serial boundary never appears,
       so split/kfold/shard hold at 100 TB.
 
-    ``"auto"`` probes with an early-exit ``limit(threshold+1).count()``
-    (narrow, no shuffle) and picks accordingly."""
+    ``"auto"`` first reads the analyzed plan's row bound (``maxRows``:
+    a ``limit``/exact-N sample caps it, a bare table scan has none) and
+    picks ``"local"`` with no job when the bound is at most
+    ``local_threshold``. Only an unbounded plan runs the counting probe,
+    an early-exit ``limit(threshold+1).count()`` (narrow, no shuffle)."""
     if strategy == "auto":
-        strategy = (
-            "local"
-            if df.limit(local_threshold + 1).count() <= local_threshold
-            else "distributed"
-        )
+        bound = _max_rows(df)
+        if bound is None or bound > local_threshold:
+            bound = df.limit(local_threshold + 1).count()
+        strategy = "local" if bound <= local_threshold else "distributed"
     if strategy == "local":
         w = Window.orderBy(md5_key(*key_cols, seed=seed), *key_cols)
         return df.withColumn("_rn", F.row_number().over(w)).withColumn(
@@ -421,16 +441,12 @@ def kcenter_coreset(
 
     Returns [(round, id, dist2_at_selection)] — round 0 is the seed.
     """
-    from jigsaw_spark.functions.hashing import det_order
-
     xq_arr = F.transform(
         F.col(vec_col).cast("array<double>"),
         lambda x: F.round(x * scale).cast("long"),
     )
     base = df.select(F.col(id_col), xq_arr.alias("_xq"))
-    seed_rows = base.orderBy(
-        *det_order(id_col, seed="kcenter")
-    ).limit(1).collect()
+    seed_rows = exact_sample(base, 1, [id_col], seed="kcenter").collect()
     if not seed_rows:  # totality guard: empty corpus -> empty coreset
         return []
     seed = seed_rows[0]

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from jigsaw_spark.functions.vectors import cosine_similarity
+from jigsaw_spark.operators.samples import exact_sample
 
 
 def _to_double(col) -> F.Column:
@@ -565,14 +566,7 @@ def kmeans_lloyd(
     ``assigned`` frame reflects the PENULTIMATE codebook (Lloyd assigns,
     then updates means once more before returning).
     """
-    from jigsaw_spark.functions.hashing import det_order
-
-    seeds = (
-        df.select(id_col, vec_col)
-        .orderBy(*det_order(id_col, seed="kmeans-init"))
-        .limit(k)
-        .collect()
-    )
+    seeds = exact_sample(df.select(id_col, vec_col), k, [id_col], seed="kmeans-init").collect()
     centroids = [(i, list(map(float, r[vec_col]))) for i, r in enumerate(seeds)]
     assigned = None
     for _ in range(iters):
@@ -615,14 +609,7 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
-    from jigsaw_spark.functions.hashing import det_order
-
-    seeds = (
-        df.select(vec_col)
-        .orderBy(*det_order(id_col, seed="pq-train"))
-        .limit(k)
-        .collect()
-    )
+    seeds = exact_sample(df.select(id_col, vec_col), k, [id_col], seed="pq-train").collect()
     S = np.array([r[vec_col] for r in seeds], dtype=np.float64)
     dim = S.shape[1]
     if dim % m:
@@ -699,14 +686,7 @@ def ivfpq_topk(
     # vectors in md5 order), but encode + cell-assign in ONE fused kernel
     # below — a separate pq_encode ⋈ ivf_assign join would shuffle the
     # corpus on id twice for data both kernels already hold row-locally
-    from jigsaw_spark.functions.hashing import det_order
-
-    seeds = (
-        corpus.select(vec_col)
-        .orderBy(*det_order(id_col, seed="pq-train"))
-        .limit(codes_k)
-        .collect()
-    )
+    seeds = exact_sample(corpus.select(id_col, vec_col), codes_k, [id_col], seed="pq-train").collect()
     S = np.array([r[vec_col] for r in seeds], dtype=np.float64)
     dim = S.shape[1]
     if dim % m:
@@ -984,7 +964,6 @@ def kmeans_lloyd_exact(
     Returns (final assignment DataFrame, centroid triples
     (cid, dim, c_micro), cluster sizes {cid: n}).
     """
-    from jigsaw_spark.functions.hashing import det_order
     from jigsaw_spark.operators.ml import _tdiv
 
     xq_arr = F.transform(
@@ -999,11 +978,7 @@ def kmeans_lloyd_exact(
     base = df.select(F.col(id_col), xq_arr.alias("_xq")).localCheckpoint()
     # seeds: ONE collect serving both the id order and the coordinates
     # (was two jobs — an id collect + an isin-filtered row collect)
-    seed_rows = (
-        base.orderBy(*det_order(id_col, seed="kmeans-exact-init"))
-        .limit(k)
-        .collect()
-    )
+    seed_rows = exact_sample(base, k, [id_col], seed="kmeans-exact-init").collect()
     # Totality guard (mirrors pagerank_exact): a corpus with fewer than k
     # rows degrades to k = n clusters; an empty corpus returns an empty
     # assignment rather than KeyError-ing on a missing seed centroid.

@@ -311,22 +311,6 @@ def chunk_documents(
     )
 
 
-def chunk_documents_sql(
-    key: str = "doc_id", chunk_size: int = 64, overlap: int = 16
-) -> str:
-    """DuckDB rendering of chunk_documents over the `toks` CTE (same
-    0-based chunk_idx, same truncated final chunk)."""
-    stride = chunk_size - overlap
-    return f"""
-    SELECT {key},
-           CAST(i // {stride} AS INT) AS chunk_idx,
-           len(list_slice(t, i + 1, least(i + {chunk_size}, len(t)))) AS n_chunk_tokens,
-           array_to_string(list_slice(t, i + 1, least(i + {chunk_size}, len(t))), ' ') AS chunk_text
-    FROM (SELECT {key}, t, unnest(range(0, len(t), {stride})) AS i
-          FROM toks WHERE len(t) >= 1) u
-    """
-
-
 def pack_sequences(
     df: "DataFrame",
     key_cols: list[str],

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # The driver-provided synthetic tables (TESTDATA.md). `documents` and
 # `embeddings` back the LLM-pipeline operators; the TPC-H-ish star schema
@@ -52,7 +53,9 @@ def get_spark(app_name: str = "jigsaw_spark", cpus: int | None = None) -> SparkS
         batches via Arrow instead of pickled rows.
       - Python workers get the package's parent directory on PYTHONPATH,
         so kernels that reference jigsaw_spark helpers import them from
-        any working directory.
+        any working directory. Where that makes the package importable,
+        their daemon is ``jigsaw_spark.daemon``: pyspark's own, except that
+        a worker re-reads a zip on its path only when the zip changed.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -82,9 +85,41 @@ def get_spark(app_name: str = "jigsaw_spark", cpus: int | None = None) -> SparkS
         # nanos timestamp — read as long and convert in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    if os.path.isfile(os.path.join(_PACKAGE_PARENT, "jigsaw_spark", "daemon.py")):
+        builder = builder.config("spark.python.daemon.module", "jigsaw_spark.daemon")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Parquet settings that change the schema a read infers; each is part of
+# the schema cache's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_schemas: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job on a
+    warm path. A plain local file's inferred schema is cached under its
+    absolute path, size, mtime and the settings in ``_SCHEMA_CONFS``, so a
+    rewritten file is inferred again. Directories and remote paths are
+    inferred every time."""
+    path = os.path.abspath(path)
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns, *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    schema = _schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -93,7 +128,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Nanosecond-precision timestamp columns (which Spark reads as long under
     ``nanosAsLong``) are converted to microsecond timestamps — a projection
-    folded into the scan, not a materialization."""
+    folded into the scan, not a materialization. The file's schema is
+    inferred once per process and file version (:func:`_read_parquet`), so
+    a warm read launches no Spark job."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -116,7 +153,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
         except Exception:
             pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         dt = df.schema["ts"].dataType
         if isinstance(dt, LongType):
@@ -133,16 +170,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Read all synthetic tables and register them as temp views so both the
-    DataFrame API and ``spark.sql`` can address them by name."""
+    """Read every synthetic table present through :func:`load_table` and
+    register it as a temp view, so both the DataFrame API and ``spark.sql``
+    address the same frames the queries read."""
     out: dict[str, DataFrame] = {}
     for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        df.createOrReplaceTempView(name)
-        out[name] = df
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            out[name] = load_table(spark, sf_dir, name)
+            out[name].createOrReplaceTempView(name)
     return out
 
 

@@ -16,6 +16,8 @@ import shutil
 import subprocess
 import sys
 import textwrap
+import zipfile
+import zipimport
 from pathlib import Path
 
 from tests.conftest import SF_SMOKE
@@ -109,3 +111,69 @@ def test_every_plans_module_imports_first():
         if proc.returncode != 0:
             failed[name] = proc.stderr.strip().splitlines()[-1]
     assert not failed, f"{len(failed)} of {len(names)} modules: {failed}"
+
+
+def _zip_with(path: Path, *modules: str) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for m in modules:
+            z.writestr(f"{m}.py", "X = 1\n")
+
+
+def _count_reads(monkeypatch) -> list[str]:
+    reads: list[str] = []
+    orig = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return orig(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return reads
+
+
+def test_daemon_rereads_a_zip_only_when_it_changes(tmp_path, monkeypatch):
+    """`jigsaw_spark.daemon`'s guard: importers of archives read before
+    `install()` skip the re-read; a rewritten archive (new mtime) is read
+    again, once, and every importer of it finds the new modules."""
+    from jigsaw_spark import daemon
+
+    archive = tmp_path / "lib.zip"
+    _zip_with(archive, "a")
+    imp = zipimport.zipimporter(str(archive))
+    monkeypatch.setattr(daemon, "_stamps", {})
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", daemon._invalidate)
+    daemon.install()
+    reads = _count_reads(monkeypatch)
+    imp.invalidate_caches()
+    assert reads == []
+    other = zipimport.zipimporter(str(archive))
+    st = os.stat(archive)
+    _zip_with(archive, "a", "b")
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    imp.invalidate_caches()
+    imp.invalidate_caches()
+    other.invalidate_caches()  # takes the directory imp just read
+    assert reads == [str(archive)]
+    assert imp.find_spec("b") is not None
+    assert other.find_spec("b") is not None
+
+
+def test_worker_keeps_its_archive_directories_across_tasks(spark):
+    """In a task on `get_spark`'s workers, `importlib.invalidate_caches()`
+    (which pyspark's worker runs before every task) reads no zip directory."""
+
+    def probe(_):
+        import importlib
+        import zipimport
+
+        reads = []
+        orig = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or orig(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = orig
+        yield reads
+
+    for _ in range(2):
+        assert spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect() == [[]]
