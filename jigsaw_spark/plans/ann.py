@@ -21,7 +21,7 @@ from jigsaw_spark.operators.similarity import (
     srp_planes,
     srp_signature_sql,
 )
-from jigsaw_spark.plans.dedup import _KEEPER_EDGES_CTE
+from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE
 from jigsaw_spark.plans.registry import _t, register
 
 
@@ -1710,15 +1710,7 @@ def emb_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _recall_under_dedup_sql() -> str:
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     keeper_of AS (
       SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
       FROM fpt),

@@ -26,7 +26,7 @@ from jigsaw_spark.operators.text import (
     tokens_sql,
 )
 from jigsaw_spark.plans.dedup import (
-    _KEEPER_EDGES_CTE,
+    _KEEPER_COMPONENTS_CTE,
     _PRE_SQL,
     _TOKS_CTE,
     _keeper_cluster_sql,
@@ -806,15 +806,7 @@ def _cluster_extinction_sql() -> str:
     )
 
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     gate AS MATERIALIZED (
       SELECT k.doc_id,
              (NOT (len(k.t) < 20)
@@ -1152,15 +1144,7 @@ def _gate_ok_col(docs: DataFrame, *extra: str) -> DataFrame:
 
 def _gate_dup_overlap_sql() -> str:
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     keeper_of AS (
       SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
       FROM fpt),

@@ -3,8 +3,9 @@ SimHash, embedding and cross-modal near-dup detection and their audits.
 
 The DuckDB twins of the shared keeper machinery (``_TOKS_CTE``,
 ``_SHINGLES_CTE``, ``_SIMHASH_CTE``, ``_SIMHASH_KEEPER_CTE``,
-``_KEEPER_EDGES_CTE``, ``_keeper_cluster_sql``) live here and are imported by
-the families that build on keepers.
+``_KEEPER_EDGES_CTE``, ``_KEEPER_COMPONENTS_CTE``, ``_keeper_cluster_sql``)
+and the MinHash band CTEs live here and are imported by the families that
+build on keepers.
 
 Scale: every pair source is banded (LSH bands, SimHash bands, keeper pairs),
 never all-pairs, and keeper election is C4-ordered, so replicated rows
@@ -25,8 +26,13 @@ from jigsaw_spark.operators.dedup import (
     simhash_pairs,
 )
 from jigsaw_spark.operators.text import fingerprint_sql, tokens_expr, tokens_sql
-from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, mm_phash_near_dup
-from jigsaw_spark.plans.registry import QUERIES, _t, register
+from jigsaw_spark.plans.mm import (
+    _DHASH_PAIRS_CTE,
+    _PHASH_BYTES_CTE,
+    _dhash_ham_cte,
+    mm_phash_near_dup,
+)
+from jigsaw_spark.plans.registry import QUERIES, _components_cte, _t, register
 
 
 _TOKS_CTE = f"toks AS (SELECT doc_id, {tokens_sql('text')} AS t FROM documents)"
@@ -37,6 +43,32 @@ _SHINGLES_CTE = (
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle "
     "FROM toks WHERE len(t) >= 3)"
 )
+
+
+def _minhash_cte(
+    src: str = "sh", seeds: int = 16, name: str = "mh", materialized: bool = False
+) -> str:
+    """``name(doc_id, seed, mh)``: for each doc in ``src(doc_id, shingle)``
+    and each of ``seeds`` seeds, the least md5 of ``seed|shingle`` — the
+    MinHash signature the LSH operators compute."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{name} AS{mat} (
+      SELECT doc_id, seed,
+             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
+      FROM {src} CROSS JOIN (SELECT unnest(range({seeds})) AS seed) seeds
+      GROUP BY doc_id, seed)"""
+
+
+def _bands_cte(
+    rows: int = 4, name: str = "bands", mh: str = "mh", materialized: bool = False
+) -> str:
+    """``name(doc_id, band, sig)``: a MinHash CTE cut into bands of ``rows``
+    consecutive seeds, each band's hashes joined in seed order."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{name} AS{mat} (
+      SELECT doc_id, seed // {rows} AS band,
+             string_agg(mh, ',' ORDER BY seed) AS sig
+      FROM {mh} GROUP BY doc_id, band)"""
 
 
 # Shared oracle CTE chain for the C4-ordered pair scorers
@@ -58,15 +90,8 @@ _BANDED_PAIR_CTES = f"""{_TOKS_CTE},
              unnest(list_transform(range(1, len(t) - 1),
                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
       FROM keep WHERE len(t) >= 3),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS MATERIALIZED (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte(materialized=True)},
     cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -134,15 +159,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_lsh",
     f"""
     WITH {_TOKS_CTE}, {_SHINGLES_CTE},
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band)
+    {_minhash_cte()},
+    {_bands_cte()}
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands a
     JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
@@ -221,6 +239,11 @@ _KEEPER_EDGES_CTE = f"""{_SIMHASH_KEEPER_CTE},
       UNION
       SELECT doc_b AS u, doc_a AS v FROM prs)"""
 
+# The keeper graph's connected components (``reach``, ``comp``), for a
+# ``WITH RECURSIVE`` block.
+_KEEPER_COMPONENTS_CTE = f"""{_KEEPER_EDGES_CTE},
+    {_components_cte()}"""
+
 
 @register(
     "dedup_simhash",
@@ -263,13 +286,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION
       SELECT doc_b AS u, doc_a AS v FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u)
-    SELECT u AS doc_id, least(u, min(v)) AS component
-    FROM reach GROUP BY u
+    {_components_cte()}
+    SELECT doc_id, component FROM comp
     """,
     "duplicate clusters: connected components (min reachable id) over "
     "SimHash near-dup pairs — pairwise evidence → keeper groups; Spark "
@@ -298,15 +316,8 @@ _BOILER = (
       FROM documents),
     toks AS (SELECT doc_id, {tokens_sql('text')} AS t FROM src),
     {_SHINGLES_CTE},
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte()},
     sized AS (SELECT band, sig, count(*) AS n FROM bands GROUP BY band, sig),
     small AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -346,15 +357,8 @@ def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_end_to_end",
     f"""
     WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte()},
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -362,13 +366,7 @@ def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION SELECT doc_b AS u, doc_a AS v FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    {_components_cte()},
     labeled AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
       FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
@@ -687,15 +685,8 @@ def dedup_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes sa ON doc_a = sa.doc_id
       JOIN sizes sb ON doc_b = sb.doc_id
       WHERE inter / (sa.sz + sb.sz - inter) >= 0.5),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte()},
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -805,11 +796,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes sa ON doc_a = sa.doc_id
       JOIN sizes sb ON doc_b = sb.doc_id
       WHERE inter / (sa.sz + sb.sz - inter) >= 0.3),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
+    {_minhash_cte()},
     est AS (
       SELECT t.doc_a, t.doc_b,
              CAST(sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1036,14 +1023,7 @@ def _keeper_cluster_sql() -> str:
       SELECT doc_a AS u, doc_b AS v FROM prs
       UNION
       SELECT doc_b AS u, doc_a AS v FROM prs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS MATERIALIZED (
-      SELECT u AS doc_id, least(u, min(v)) AS keeper
-      FROM reach GROUP BY u),
+    {_components_cte("doc_id", "keeper", materialized=True)},
     assigned AS MATERIALIZED (
       SELECT d.doc_id, coalesce(c.keeper, d.doc_id) AS keeper
       FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
@@ -1344,10 +1324,7 @@ def _band_sweep_sql() -> str:
     for b, r in _BAND_CFGS:
         thr = round(1000 * (1.0 / b) ** (1.0 / r))
         arms.append(f"""
-    bands_{b} AS (
-      SELECT doc_id, seed // {r} AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_bands_cte(rows=r, name=f'bands_{b}')},
     pairs_{b} AS (
       SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
       FROM bands_{b} a
@@ -1363,11 +1340,7 @@ def _band_sweep_sql() -> str:
     )
     return f"""
     WITH {_TOKS_CTE}, {_SHINGLES_CTE},
-    mh AS MATERIALIZED (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
+    {_minhash_cte(materialized=True)},
     {','.join(arms)}
     SELECT CAST(bands AS INT) AS bands,
            CAST(rows_per_band AS INT) AS rows_per_band,
@@ -1566,19 +1539,7 @@ def _cross_modal_sql() -> str:
       SELECT DISTINCT doc_id FROM (
         SELECT doc_a AS doc_id FROM prs
         UNION ALL SELECT doc_b AS doc_id FROM prs)),
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    mham AS (
-      SELECT c.ia, c.ib,
-             CAST(sum(bit_count(xor(x.byte_val, y.byte_val))) AS BIGINT)
-               AS hamming
-      FROM mcand c
-      JOIN ph_bytes x ON x.i = c.ia
-      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-      GROUP BY 1, 2),
+    {_dhash_ham_cte("mcand", "mham")},
     idocs AS (
       SELECT DISTINCT doc_id FROM (
         SELECT ia AS doc_id FROM mham WHERE hamming <= 6
@@ -1695,21 +1656,7 @@ def _pooled_components_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_EDGES_CTE},
     {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    mpairs AS MATERIALIZED (
-      SELECT ia AS doc_a, ib AS doc_b FROM (
-        SELECT c.ia, c.ib,
-               CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-                 AS BIGINT) AS hamming
-        FROM mcand c
-        JOIN ph_bytes x ON x.i = c.ia
-        JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-        GROUP BY 1, 2) h
-      WHERE h.hamming <= 6),
+    {_DHASH_PAIRS_CTE},
     tedges AS (SELECT u, v FROM edges),
     iedges AS MATERIALIZED (
       SELECT doc_a AS u, doc_b AS v FROM mpairs
@@ -1818,15 +1765,8 @@ def _detector_agreement_sql() -> str:
     return f"""
     WITH {_SIMHASH_CTE},
     {_SHINGLES_CTE},
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte()},
     mhp AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -1939,15 +1879,8 @@ def _sig_size_sql() -> str:
     cfg = []
     for np_ in _SIG_SIZES:
         cfg.append(f"""
-    mh_{np_} AS MATERIALIZED (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range({np_})) AS seed) s
-      GROUP BY doc_id, seed),
-    bands_{np_} AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh_{np_} GROUP BY doc_id, band),
+    {_minhash_cte(seeds=np_, name=f'mh_{np_}', materialized=True)},
+    {_bands_cte(name=f'bands_{np_}', mh=f'mh_{np_}')},
     cand_{np_} AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands_{np_} a
@@ -2193,15 +2126,8 @@ def _pooled_detectors_sql() -> str:
                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
                AS shingle
       FROM ktoks WHERE len(t) >= 3),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM ksh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte(src="ksh")},
+    {_bands_cte()},
     mhp AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a

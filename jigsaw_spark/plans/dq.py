@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from jigsaw_spark.functions.hashing import det_hash
-from jigsaw_spark.plans.dedup import _KEEPER_EDGES_CTE
-from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, mm_phash_near_dup
+from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE, _KEEPER_EDGES_CTE
+from jigsaw_spark.plans.mm import _DHASH_PAIRS_CTE, _PHASH_BYTES_CTE, mm_phash_near_dup
 from jigsaw_spark.plans.registry import QUERIES, _t, register
 
 
@@ -2071,15 +2071,7 @@ def _dedup_bias_sql() -> str:
     )
 
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     labeled AS (
       SELECT d.doc_id, d.n_chars, d.text,
              coalesce(c.component, d.doc_id) AS component
@@ -3301,15 +3293,7 @@ def dq_repair_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cluster_leakage_sql() -> str:
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     -- every doc -> its exact keeper (fp min) -> the keeper's component
     keeper_of AS (
       SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
@@ -3449,21 +3433,7 @@ def _pooled_leakage_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_EDGES_CTE},
     {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    mpairs AS MATERIALIZED (
-      SELECT ia AS doc_a, ib AS doc_b FROM (
-        SELECT c.ia, c.ib,
-               CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-                 AS BIGINT) AS hamming
-        FROM mcand c
-        JOIN ph_bytes x ON x.i = c.ia
-        JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-        GROUP BY 1, 2) h
-      WHERE h.hamming <= 6),
+    {_DHASH_PAIRS_CTE},
     keeper_of AS (
       SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
       FROM fpt),
@@ -4122,15 +4092,7 @@ def _leak_overlap_sql() -> str:
 
     hold = _HOLDOUT_SQL.format(d="doc_id")
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     keeper_of AS (
       SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
       FROM fpt),
@@ -4411,15 +4373,7 @@ def dq_split_embedding_drift(
 def _cluster_repair_sql() -> str:
     hold = _HOLDOUT_SQL.format(d="k.doc_id")
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     keeper_of AS (
       SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
       FROM fpt),

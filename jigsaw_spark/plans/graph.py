@@ -19,25 +19,20 @@ from jigsaw_spark.plans.dedup import (
     _SHINGLES_CTE,
     _SIMHASH_KEEPER_CTE,
     _TOKS_CTE,
+    _bands_cte,
     _keeper_cluster_sql,
+    _minhash_cte,
 )
-from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, mm_phash_near_dup
-from jigsaw_spark.plans.registry import _t, register
+from jigsaw_spark.plans.mm import _DHASH_PAIRS_CTE, _PHASH_BYTES_CTE, mm_phash_near_dup
+from jigsaw_spark.plans.registry import _components_cte, _t, register
 
 
 @register(
     "graph_triangles_total",
     f"""
     WITH {_TOKS_CTE}, {_SHINGLES_CTE},
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte()},
     e AS (
       SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
       FROM bands a
@@ -117,15 +112,8 @@ def _pagerank_exact_sql() -> str:
              unnest(list_transform(range(1, len(t) - 1),
                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
       FROM toks WHERE len(t) >= 3),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS MATERIALIZED (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte(materialized=True)},
     pairs AS (
       SELECT DISTINCT x_a.doc_id AS a, x_b.doc_id AS b
       FROM bands x_a
@@ -216,15 +204,8 @@ def _lsh_edges_cte() -> str:
              unnest(list_transform(range(1, len(t) - 1),
                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
       FROM toks WHERE len(t) >= 3),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS MATERIALIZED (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte(materialized=True)},
     pairs AS (
       SELECT DISTINCT x_a.doc_id AS a, x_b.doc_id AS b
       FROM bands x_a
@@ -730,14 +711,7 @@ def _modularity_sql() -> str:
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION
       SELECT doc_b AS u, doc_a AS v FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS MATERIALIZED (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    {_components_cte(materialized=True)},
     mm AS (SELECT count(*) AS m FROM pairs),
     intra AS (
       SELECT ca.component, count(*) AS ec
@@ -2863,21 +2837,7 @@ def _component_depth_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_EDGES_CTE},
     {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    mpairs AS MATERIALIZED (
-      SELECT ia AS doc_a, ib AS doc_b FROM (
-        SELECT c.ia, c.ib,
-               CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-                 AS BIGINT) AS hamming
-        FROM mcand c
-        JOIN ph_bytes x ON x.i = c.ia
-        JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-        GROUP BY 1, 2) h
-      WHERE h.hamming <= 6),
+    {_DHASH_PAIRS_CTE},
     tedges AS (SELECT u, v FROM edges),
     iedges AS MATERIALIZED (
       SELECT doc_a AS u, doc_b AS v FROM mpairs

@@ -26,7 +26,7 @@ from jigsaw_spark.multimodal.binary_ops import (
     mask_to_bboxes,
 )
 from jigsaw_spark.operators.similarity import srp_buckets
-from jigsaw_spark.plans.registry import _t, register
+from jigsaw_spark.plans.registry import _components_cte, _t, register
 
 
 def _as_binary_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
@@ -604,6 +604,36 @@ _PHASH_BYTES_CTE = """
 """
 
 
+def _dhash_ham_cte(
+    cand: str = "mcand", ham: str = "ham", materialized: bool = False
+) -> str:
+    """Candidate + verify CTEs over ``ph_bytes``: ``cand(ia, ib)`` holds the
+    image pairs (ia < ib) with one identical dHash byte at the same index
+    (a pair within Hamming distance 7 has one, by pigeonhole over the 8
+    bytes), and ``ham(ia, ib, hamming)`` each candidate's full distance."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{cand} AS (
+      SELECT DISTINCT x.i AS ia, y.i AS ib
+      FROM ph_bytes x
+      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
+                     AND x.byte_val = y.byte_val AND x.i < y.i),
+    {ham} AS{mat} (
+      SELECT c.ia, c.ib,
+             CAST(sum(bit_count(xor(x.byte_val, y.byte_val))) AS BIGINT)
+               AS hamming
+      FROM {cand} c
+      JOIN ph_bytes x ON x.i = c.ia
+      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
+      GROUP BY 1, 2)"""
+
+
+# The image near-dup pairs (Hamming <= 6) as ``mpairs(doc_a, doc_b)``: the
+# image arm the pooled text + image detectors join to the keeper graph.
+_DHASH_PAIRS_CTE = f"""{_dhash_ham_cte()},
+    mpairs AS MATERIALIZED (
+      SELECT ia AS doc_a, ib AS doc_b FROM ham WHERE hamming <= 6)"""
+
+
 def _synth_images(docs: DataFrame) -> DataFrame:
     """Apply the deterministic image-synthesis kernel to a frame of
     doc_ids — extracted from ``_phash_images`` (r13) so the SAME
@@ -765,19 +795,7 @@ def mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_phash_near_dup",
     f"""
     WITH {_PHASH_BYTES_CTE},
-    cand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    ham AS (
-      SELECT c.ia, c.ib,
-             CAST(sum(bit_count(xor(x.byte_val, y.byte_val))) AS BIGINT)
-               AS hamming
-      FROM cand c
-      JOIN ph_bytes x ON x.i = c.ia
-      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-      GROUP BY 1, 2)
+    {_dhash_ham_cte("cand")}
     SELECT CAST(ia AS VARCHAR) AS img_a, CAST(ib AS VARCHAR) AS img_b,
            hamming
     FROM ham WHERE hamming <= 6
@@ -902,30 +920,11 @@ def mm_resize_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phash_components_sql() -> str:
     return f"""
     WITH RECURSIVE {_PHASH_BYTES_CTE},
-    cand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    ham AS (
-      SELECT c.ia, c.ib
-      FROM cand c
-      JOIN ph_bytes x ON x.i = c.ia
-      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-      GROUP BY 1, 2
-      HAVING CAST(sum(bit_count(xor(x.byte_val, y.byte_val))) AS BIGINT)
-             <= 6),
+    {_DHASH_PAIRS_CTE},
     edges AS (
-      SELECT ia AS u, ib AS v FROM ham
-      UNION SELECT ib AS u, ia AS v FROM ham),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS img, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+      SELECT doc_a AS u, doc_b AS v FROM mpairs
+      UNION SELECT doc_b AS u, doc_a AS v FROM mpairs),
+    {_components_cte("img")},
     universe AS (SELECT DISTINCT i AS img FROM ph_bytes),
     labeled AS (
       SELECT un.img, coalesce(c.component, un.img) AS component
@@ -1009,21 +1008,7 @@ def mm_phash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phash_cluster_sources_sql() -> str:
     return f"""
     WITH RECURSIVE {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    mpairs AS MATERIALIZED (
-      SELECT ia AS doc_a, ib AS doc_b FROM (
-        SELECT c.ia, c.ib,
-               CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-                 AS BIGINT) AS hamming
-        FROM mcand c
-        JOIN ph_bytes x ON x.i = c.ia
-        JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-        GROUP BY 1, 2) h
-      WHERE h.hamming <= 6),
+    {_DHASH_PAIRS_CTE},
     iedges AS (
       SELECT doc_a AS u, doc_b AS v FROM mpairs
       UNION SELECT doc_b AS u, doc_a AS v FROM mpairs),
@@ -1149,19 +1134,7 @@ def _phash_sweep_sql() -> str:
     thr = ", ".join(str(t) for t in _PHASH_THRESHOLDS)
     return f"""
     WITH {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    ham AS MATERIALIZED (
-      SELECT c.ia, c.ib,
-             CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-               AS BIGINT) AS hamming
-      FROM mcand c
-      JOIN ph_bytes x ON x.i = c.ia
-      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-      GROUP BY 1, 2),
+    {_dhash_ham_cte(materialized=True)},
     universe AS (SELECT CAST(count(DISTINCT i) AS BIGINT) AS n_images
                  FROM ph_bytes),
     thr AS (SELECT unnest([{thr}]) AS threshold),
@@ -1284,19 +1257,7 @@ def _threshold_purity_sql() -> str:
       JOIN documents d ON un.img = d.doc_id""")
     return f"""
     WITH RECURSIVE {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    ham AS MATERIALIZED (
-      SELECT c.ia, c.ib,
-             CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-               AS BIGINT) AS hamming
-      FROM mcand c
-      JOIN ph_bytes x ON x.i = c.ia
-      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-      GROUP BY 1, 2),
+    {_dhash_ham_cte(materialized=True)},
     universe AS (SELECT DISTINCT i AS img FROM ph_bytes),
     {','.join(arms)},
     lab AS MATERIALIZED ({' UNION ALL '.join(labs)}),
@@ -1438,19 +1399,7 @@ def _phash_band_sweep_sql() -> str:
     )
     return f"""
     WITH {_PHASH_BYTES_CTE.strip()},
-    mcand AS (
-      SELECT DISTINCT x.i AS ia, y.i AS ib
-      FROM ph_bytes x
-      JOIN ph_bytes y ON x.byte_idx = y.byte_idx
-                     AND x.byte_val = y.byte_val AND x.i < y.i),
-    ham AS MATERIALIZED (
-      SELECT c.ia, c.ib,
-             CAST(sum(bit_count(xor(x.byte_val, y.byte_val)))
-               AS BIGINT) AS hamming
-      FROM mcand c
-      JOIN ph_bytes x ON x.i = c.ia
-      JOIN ph_bytes y ON y.i = c.ib AND y.byte_idx = x.byte_idx
-      GROUP BY 1, 2),
+    {_dhash_ham_cte(materialized=True)},
     truep AS (
       SELECT CAST(count(*) AS BIGINT) AS n_true FROM ham
       WHERE hamming <= 6),

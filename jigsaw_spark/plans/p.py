@@ -34,8 +34,8 @@ from jigsaw_spark.plans.curation import (
     _gate_flags_sql,
     _gate_ok_col,
 )
-from jigsaw_spark.plans.dedup import _KEEPER_EDGES_CTE, _SIMHASH_CTE
-from jigsaw_spark.plans.registry import _t, dec2, dsum, register
+from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE, _SIMHASH_CTE
+from jigsaw_spark.plans.registry import _components_cte, _t, dec2, dsum, register
 
 
 # ---------------------------------------------------------------------------
@@ -1028,14 +1028,7 @@ def _lss_sql() -> str:
       SELECT doc_a AS u, doc_b AS v FROM prs
       UNION
       SELECT doc_b AS u, doc_a AS v FROM prs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS MATERIALIZED (
-      SELECT u AS doc_id, least(u, min(v)) AS keeper
-      FROM reach GROUP BY u),
+    {_components_cte("doc_id", "keeper", materialized=True)},
     assigned AS (
       SELECT d.doc_id,
              coalesce(c.keeper, d.doc_id) AS keeper
@@ -1102,14 +1095,7 @@ def _gkf_sql() -> str:
       SELECT doc_a AS u, doc_b AS v FROM prs
       UNION
       SELECT doc_b AS u, doc_a AS v FROM prs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS MATERIALIZED (
-      SELECT u AS doc_id, least(u, min(v)) AS keeper
-      FROM reach GROUP BY u),
+    {_components_cte("doc_id", "keeper", materialized=True)},
     assigned AS (
       SELECT d.doc_id,
              coalesce(c.keeper, d.doc_id) AS keeper
@@ -1992,15 +1978,7 @@ def _dedup_mix_sql() -> str:
                AS BIGINT) AS alloc
       FROM base_{arm})""")
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     -- survivor = exact keeper (in ktoks, the fp-min window of the
     -- keeper CTE) AND the min id of its near-dup component
     keep AS (
@@ -2380,15 +2358,7 @@ def _curated_mix_sql() -> str:
                AS BIGINT) AS alloc
       FROM base_{arm})""")
     return f"""
-    WITH RECURSIVE {_KEEPER_EDGES_CTE},
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
     keep AS (
       SELECT d.doc_id, d.source, len(k.t) AS ntok
       FROM documents d

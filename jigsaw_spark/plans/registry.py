@@ -103,3 +103,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # toward zero; the CASE form spells the same semantics in DuckDB whatever
 # its `//` does on negatives (operators/ml._tdiv is the Python twin).
 _TDIV = "CASE WHEN {x} >= 0 THEN {x} // {d} ELSE -((-({x})) // {d}) END"
+
+
+def _components_cte(
+    node: str = "doc_id", label: str = "component", materialized: bool = False
+) -> str:
+    """Connected components of a symmetric ``edges(u, v)`` CTE, as two DuckDB
+    CTEs for a ``WITH RECURSIVE`` block: ``reach(u, v)`` holds every node
+    reachable from ``u``, and ``comp`` labels each node that has an edge
+    with the least id in its component (columns ``node``, ``label``). Nodes
+    without an edge get no row; callers coalesce them to themselves."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""reach(u, v) AS (
+      SELECT u, v FROM edges
+      UNION
+      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+      WHERE e.v <> r.u),
+    comp AS{mat} (
+      SELECT u AS {node}, least(u, min(v)) AS {label}
+      FROM reach GROUP BY u)"""

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from jigsaw_spark.operators.text import tokens_sql
 from jigsaw_spark.plans.curation import _DSIR_B
+from jigsaw_spark.plans.dedup import _bands_cte, _minhash_cte
 from jigsaw_spark.plans.dq import _holdout_col
 from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, _phash_images, _synth_images
 from jigsaw_spark.plans.registry import _t, dec2, dsum, register
@@ -44,6 +45,23 @@ def _state_partitions(spark: SparkSession, n: int = STREAM_STATE_PARTITIONS):
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def _drain(df: DataFrame, mode: str = "complete") -> DataFrame:
+    """Run the streaming frame ``df`` to completion (AvailableNow) into a
+    fresh memory table under ``_state_partitions``, and return the table."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    with _state_partitions(spark):
+        q = (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.table(name)
 
 
 def _detach_and_clean(df: DataFrame, *dirs: str) -> DataFrame:
@@ -118,17 +136,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
     deduped = stream_dedup(stream, ["event_id"], watermark="2 hours")
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg)
 
 
 @register(
@@ -145,17 +153,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = windowed_event_counts(stream, "1 hour")
-    name = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg)
 
 
 @register(
@@ -198,20 +196,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND c_ts <= v_ts + interval 10 minutes"
         ),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     from pyspark.sql import functions as F2
 
     return (
-        spark.table(name)
+        _drain(joined, "append")
         .groupBy(F2.col("v_user").alias("user_id"))
         .agg(F2.count(F2.lit(1)).alias("n_pairs"))
     )
@@ -294,17 +282,7 @@ def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("running_sum"),
     )
-    name = f"stream_ck_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            partial.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(partial).select(
         F.lit("events").alias("tbl"),
         F.col("n_rows").cast("bigint").alias("n_rows"),
         F.expr(f"CAST(running_sum % {_CK_MOD_STREAM} AS BIGINT)").alias(
@@ -352,22 +330,10 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_event_stream,
     )
 
-    import uuid
-
     dim = spark.createDataFrame(list(_EVENT_DIM), "event_type string, category string")
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = enriched_event_counts(stream, dim)
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg)
 
 
 @register(
@@ -380,15 +346,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              unnest(list_transform(range(1, len(t) - 1),
                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
       FROM toks WHERE len(t) >= 3),
-    mh AS (
-      SELECT doc_id, seed,
-             min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed) seeds
-      GROUP BY doc_id, seed),
-    bands AS MATERIALIZED (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(mh, ',' ORDER BY seed) AS sig
-      FROM mh GROUP BY doc_id, band),
+    {_minhash_cte()},
+    {_bands_cte(materialized=True)},
     idx AS (
       SELECT DISTINCT band, sig FROM bands WHERE doc_id % 2 = 0),
     hits AS (
@@ -416,8 +375,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "assembled batch-side from the drained hit table",
 )
 def stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.operators.dedup import minhash_band_sigs
     from jigsaw_spark.streaming.ingest import read_document_stream
 
@@ -441,17 +398,7 @@ def stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit_bands"))
     )
-    name = f"stream_lsh_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            hits.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    blocked = spark.table(name)
+    blocked = _drain(hits)
     new_docs = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "source"
     )
@@ -499,8 +446,6 @@ def stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "same 30-min gap as every session operator in the engine",
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.streaming.ingest import read_event_stream
 
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
@@ -519,17 +464,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = f"stream_sw_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg)
 
 
 @register(
@@ -598,8 +533,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "all appeared at fit time",
 )
 def stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.operators.samples import (
         dsir_doc_buckets,
         dsir_gram_buckets,
@@ -648,17 +581,7 @@ def stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("logw_micro"),
         )
     )
-    name = f"stream_dsir_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            scored.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain(scored)
 
 
 # ---------------------------------------------------------------------------
@@ -692,8 +615,6 @@ _CDC_SQL = """
     "drain equals the batch row_number()=1 formulation the oracle runs",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.streaming.ingest import read_event_stream
 
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
@@ -709,17 +630,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("last.event_type").alias("last_type"),
         F.round(F.col("last.value"), 2).alias("last_value"),
     )
-    name = f"stream_cdc_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            out.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain(out)
 
 
 # ---------------------------------------------------------------------------
@@ -754,25 +665,13 @@ _STK_SQL = """
     "|types| rows per open window — KB scale",
 )
 def stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.streaming.ingest import read_event_stream
 
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
     counts = stream.groupBy(
         F.window("ts", "6 hours").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    drained = spark.table(name).select(
+    drained = _drain(counts).select(
         F.col("w.start").alias("wstart"), "event_type", "n"
     )
     r = drained.withColumn(
@@ -885,8 +784,6 @@ _SWAU_SQL = """
     "truncation rule). The engagement curve, maintained incrementally",
 )
 def stream_sliding_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.streaming.ingest import read_event_stream
 
     stream = read_event_stream(spark, sf_dir, glob="events.parquet")
@@ -895,17 +792,7 @@ def stream_sliding_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     distinct = win.dropDuplicates(["w", "user_id"])
     agg = distinct.groupBy("w").agg(F.count(F.lit(1)).alias("wau"))
-    name = f"stream_swau_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(name).select(
+    out = _drain(agg).select(
         # window [s, s+7) covers days s..s+6 -> anchor day = s+6
         (
             F.expr("unix_micros(w.start) div 86400000000") + F.lit(6)
@@ -975,8 +862,6 @@ def _stream_contamination_sql() -> str:
     "bounded by the holdout size, never the corpus",
 )
 def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.operators.text import shingles_expr, tokens_expr
     from jigsaw_spark.streaming.ingest import read_document_stream
 
@@ -1020,17 +905,7 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_occ"),
         F.count("tsh").alias("n_hit_occ"),
     )
-    name = f"stream_contam_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(agg).select(
         "doc_id",
         F.col("n_occ").cast("bigint").alias("n_occ"),
         F.col("n_hit_occ").cast("bigint").alias("n_hit_occ"),
@@ -1092,8 +967,6 @@ _ECE_MON_SQL = """
     "integer)",
 )
 def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.streaming.ingest import read_event_stream
 
     ev = _t(spark, sf_dir, "events")
@@ -1129,17 +1002,7 @@ def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("p_micro").alias("sp"),
         F.sum("y").alias("pos"),
     )
-    name = f"stream_ece_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            b.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    drained = spark.table(name)
+    drained = _drain(b)
     return drained.groupBy(F.col("w.start").alias("day")).agg(
         F.sum("n").cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("pos"),
@@ -1212,8 +1075,6 @@ _PSI_MON_SQL = """
     "on the drained bin table against the broadcast frozen card",
 )
 def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from jigsaw_spark.streaming.ingest import read_event_stream
 
     ev = _t(spark, sf_dir, "events")
@@ -1244,17 +1105,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = scored.groupBy(
         F.window("ts", "1 day").alias("w"), "bin"
     ).agg(F.count(F.lit(1)).cast("bigint").alias("a"))
-    name = f"stream_psi_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            b.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    drained = spark.table(name).select(
+    drained = _drain(b).select(
         F.col("w.start").alias("day"), "bin", "a"
     )
     card_df = F.broadcast(
@@ -1589,17 +1440,7 @@ def stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("sid", "cid")
         .agg(F.count(F.lit(1)).alias("n_hit_bands"))
     )
-    name = f"stream_phash_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            hits.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    cand = spark.table(name).select("sid", "cid").localCheckpoint()
+    cand = _drain(hits).select("sid", "cid").localCheckpoint()
     # batch-side exact verification of the drained candidates only
     # (fresh projections with distinct names — the self-join attribute
     # dedup trap)

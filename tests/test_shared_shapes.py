@@ -1,0 +1,51 @@
+"""Each oracle shape that recurs across the query families, and the
+AvailableNow memory drain, is written once under ``jigsaw_spark/plans`` and
+reached through its helper."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import pytest
+
+PLANS = Path(__file__).resolve().parent.parent / "jigsaw_spark" / "plans"
+
+SHAPES = {
+    "FROM reach r JOIN edges e": ("registry.py", "_components_cte"),
+    "min(md5(CAST(seed AS VARCHAR) || '|' || shingle))": ("dedup.py", "_minhash_cte"),
+    "JOIN ph_bytes y ON x.byte_idx = y.byte_idx": ("mm.py", "_dhash_ham_cte"),
+    '.format("memory")': ("stream.py", "_drain"),
+}
+
+
+def _owners(marker: str) -> list[tuple[str, str | None]]:
+    """(module, top-level def or assignment) of every occurrence of
+    ``marker`` in the plans' source text, one entry per occurrence."""
+    found = []
+    for path in sorted(PLANS.glob("*.py")):
+        text = path.read_text()
+        if marker not in text:
+            continue
+        lines = text.splitlines(keepends=True)
+        tree = ast.parse(text, filename=str(path))
+        owned = 0
+        for top in tree.body:
+            # a registered query's oracle sits in its decorator
+            decorators = getattr(top, "decorator_list", [])
+            first = min([d.lineno for d in decorators] + [top.lineno])
+            n = "".join(lines[first - 1 : top.end_lineno]).count(marker)
+            if isinstance(top, ast.Assign):
+                owner = ",".join(ast.unparse(t) for t in top.targets)
+            else:
+                owner = getattr(top, "name", None)
+            found += [(path.name, owner)] * n
+            owned += n
+        # text outside every top-level statement (a module comment)
+        found += [(path.name, None)] * (text.count(marker) - owned)
+    return found
+
+
+@pytest.mark.parametrize("marker", sorted(SHAPES))
+def test_recurring_shape_has_one_definition(marker):
+    assert _owners(marker) == [SHAPES[marker]]

@@ -1,18 +1,22 @@
 """Physical-plan audit: verify every registered query compiles to the plan
 we'd want at 100 TB, not merely a plan that passes at sf0.01.
 
-Checks per query (executed plan, AQE final where available):
-  - column pruning: parquet ReadSchema must not contain columns the query
-    never touches (spot-checked against a per-query expectation below)
-  - predicate pushdown: queries with scan-level filters must show
-    PushedFilters at the parquet scan
-  - broadcast: dimension joins must use BroadcastHashJoin (or broadcast
-    NLJ for the range join); no SortMergeJoin against a tiny dim
-  - no cartesian products except where the operator is genuinely all-pairs
-  - Python boundary: queries whose kernels are Arrow-vectorized must show
-    MapInPandas / ArrowEvalPython, never row-at-a-time BatchEvalPython
+Checks per query, on the physical plan its DataFrame compiles to before
+any action runs (``queryExecution().executedPlan()``; with AQE on, the
+initial plan):
+  - Python boundary: no row-at-a-time BatchEvalPython
+  - no CartesianProduct or BroadcastNestedLoopJoin, except in the
+    all-pairs-by-design queries of ALL_PAIRS_OK (and, for the nested-loop
+    join, EXPECT_BROADCAST)
+  - predicate pushdown: each EXPECT_PUSHDOWN query shows non-empty
+    PushedFilters at a parquet scan
+  - broadcast: each EXPECT_BROADCAST query shows a broadcast join
+  - no SortMergeJoin in a plan that scans the tiny region or nation tables
+  - no global window (empty partition spec) outside GLOBAL_WINDOW_OK
 
 Usage: python tools/explain_audit.py [names...]   (writes PLANS.md)
+The arguments are query names only; ``tools/ab_interleave.py
+--explain-dir`` writes a query's full formatted plan.
 """
 
 from __future__ import annotations
@@ -653,10 +657,11 @@ def main() -> int:
     spark = get_spark("plan-audit", cpus=8)
     report: list[str] = ["# PLANS — physical-plan audit\n"]
     report.append(
-        f"Scale dir: `{SF}`. Invariants checked: column pruning, filter "
-        "pushdown, broadcast dims, no accidental cartesian, Arrow-only "
-        "Python boundary. Full `.explain` output available via "
-        "`tools/explain_audit.py <name> --dump`.\n"
+        f"Scale dir: `{SF}`. Invariants checked: no row-at-a-time Python "
+        "UDF, no unexpected cartesian or nested-loop join, filter pushdown "
+        "and broadcast joins on the queries that expect them, no "
+        "sort-merge join against region/nation, no unlisted global window. "
+        "Full plans: `tools/ab_interleave.py --explain-dir DIR <name>`.\n"
     )
     report.append(FLOAT_AUDIT_NOTE)
     bad = 0
