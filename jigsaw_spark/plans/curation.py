@@ -33,7 +33,7 @@ from jigsaw_spark.plans.dedup import (
     _pre_lines,
 )
 from jigsaw_spark.plans.ml import ml_nbayes_classify
-from jigsaw_spark.plans.registry import _t, register
+from jigsaw_spark.plans.registry import _TRIGRAMS, _t, register
 from jigsaw_spark.plans.text import text_kneser_ney
 
 
@@ -505,9 +505,7 @@ def _pipeline_v4_sql() -> str:
     return f"""
     WITH toks AS (SELECT doc_id, {tokens_sql('text')} AS t FROM documents),
     sh AS MATERIALIZED (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+      SELECT DISTINCT doc_id, {_TRIGRAMS} AS shingle
       FROM toks WHERE len(t) >= 3),
     firsts AS (SELECT shingle, min(doc_id) AS fd FROM sh GROUP BY shingle),
     nov AS MATERIALIZED (
@@ -517,10 +515,7 @@ def _pipeline_v4_sql() -> str:
       FROM sh s JOIN firsts f ON s.shingle = f.shingle
       GROUP BY s.doc_id),
     shn AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
+      SELECT doc_id, {_TRIGRAMS} AS shingle FROM toks WHERE len(t) >= 3),
     cnt AS (SELECT doc_id, shingle, count(*) AS c FROM shn GROUP BY 1, 2),
     rep AS MATERIALIZED (
       SELECT doc_id, max(c) * 1000000 // sum(c) AS repetition_micro

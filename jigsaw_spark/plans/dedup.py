@@ -3,9 +3,9 @@ SimHash, embedding and cross-modal near-dup detection and their audits.
 
 The DuckDB twins of the shared keeper machinery (``_TOKS_CTE``,
 ``_SHINGLES_CTE``, ``_SIMHASH_CTE``, ``_SIMHASH_KEEPER_CTE``,
-``_KEEPER_EDGES_CTE``, ``_KEEPER_COMPONENTS_CTE``, ``_keeper_cluster_sql``)
-and the MinHash band CTEs live here and are imported by the families that
-build on keepers.
+``_KEEPER_EDGES_CTE``, ``_KEEPER_COMPONENTS_CTE``, ``_keeper_cluster_sql``),
+the SimHash pair CTE (``_simhash_edges_cte``) and the MinHash band CTEs
+live here and are imported by the families that build on keepers.
 
 Scale: every pair source is banded (LSH bands, SimHash bands, keeper pairs),
 never all-pairs, and keeper election is C4-ordered, so replicated rows
@@ -32,15 +32,20 @@ from jigsaw_spark.plans.mm import (
     _dhash_ham_cte,
     mm_phash_near_dup,
 )
-from jigsaw_spark.plans.registry import QUERIES, _components_cte, _t, register
+from jigsaw_spark.plans.registry import (
+    _TRIGRAMS,
+    QUERIES,
+    _components_cte,
+    _sym_edges_cte,
+    _t,
+    register,
+)
 
 
 _TOKS_CTE = f"toks AS (SELECT doc_id, {tokens_sql('text')} AS t FROM documents)"
 
 _SHINGLES_CTE = (
-    "sh AS (SELECT DISTINCT doc_id, "
-    "unnest(list_transform(range(1, len(t) - 1), "
-    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle "
+    f"sh AS (SELECT DISTINCT doc_id, {_TRIGRAMS} AS shingle "
     "FROM toks WHERE len(t) >= 3)"
 )
 
@@ -86,9 +91,7 @@ _BANDED_PAIR_CTES = f"""{_TOKS_CTE},
         FROM fpt) k
       WHERE is_keeper),
     sh AS MATERIALIZED (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+      SELECT DISTINCT doc_id, {_TRIGRAMS} AS shingle
       FROM keep WHERE len(t) >= 3),
     {_minhash_cte()},
     {_bands_cte(materialized=True)},
@@ -225,19 +228,32 @@ _SIMHASH_KEEPER_CTE = f"""
 """
 
 
+def _simhash_edges_cte(
+    pairs: str = "prs",
+    edges: str | None = "edges",
+    pairs_materialized: bool = False,
+    edges_materialized: bool = False,
+) -> str:
+    """``pairs(doc_a, doc_b)``: the doc pairs of a ``sig(doc_id, simhash)``
+    CTE within Hamming distance 2 (the SimHash near-dup convention), then,
+    unless ``edges`` is None, their symmetric edge list ``edges(u, v)``."""
+    mat = " MATERIALIZED" if pairs_materialized else ""
+    cte = f"""{pairs} AS{mat} (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2)"""
+    if edges is None:
+        return cte
+    return f"""{cte},
+    {_sym_edges_cte(edges, pairs, edges_materialized)}"""
+
+
 # DuckDB twin of operators/dedup.keeper_edges (advisor r9 #1): the
 # keeper-graph pair list + symmetric edge list shared by the
 # graph family (and dq, ann, p, curation). Single definition so the keeper
 # convention (exact dedup -> SimHash Hamming <= 2) cannot drift.
 _KEEPER_EDGES_CTE = f"""{_SIMHASH_KEEPER_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs)"""
+    {_simhash_edges_cte(edges_materialized=True)}"""
 
 # The keeper graph's connected components (``reach``, ``comp``), for a
 # ``WITH RECURSIVE`` block.
@@ -278,14 +294,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_components",
     f"""
     WITH RECURSIVE {_SIMHASH_CTE},
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs),
+    {_simhash_edges_cte("pairs")},
     {_components_cte()}
     SELECT doc_id, component FROM comp
     """,
@@ -363,9 +372,7 @@ def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
       JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION SELECT doc_b AS u, doc_a AS v FROM pairs),
+    {_sym_edges_cte()},
     {_components_cte()},
     labeled AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
@@ -1015,14 +1022,7 @@ def _keeper_cluster_sql() -> str:
 
     return f"""
     WITH RECURSIVE {_SIMHASH_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte()},
     {_components_cte("doc_id", "keeper", materialized=True)},
     assigned AS MATERIALIZED (
       SELECT d.doc_id, coalesce(c.keeper, d.doc_id) AS keeper
@@ -1045,9 +1045,7 @@ def _source_overlap_sql() -> str:
     WITH toks AS (
       SELECT source, {tokens_sql('text')} AS t FROM documents),
     ssh AS MATERIALIZED (
-      SELECT DISTINCT source,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+      SELECT DISTINCT source, {_TRIGRAMS} AS shingle
       FROM toks WHERE len(t) >= 3),
     sizes AS (SELECT source, count(*) AS sz FROM ssh GROUP BY source),
     inter AS (
@@ -1657,37 +1655,16 @@ def _pooled_components_sql() -> str:
     WITH RECURSIVE {_KEEPER_EDGES_CTE},
     {_PHASH_BYTES_CTE.strip()},
     {_DHASH_PAIRS_CTE},
-    tedges AS (SELECT u, v FROM edges),
-    iedges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM mpairs
-      UNION SELECT doc_b AS u, doc_a AS v FROM mpairs),
+    {_sym_edges_cte("iedges", "mpairs", materialized=True)},
     uedges AS MATERIALIZED (
-      SELECT u, v FROM tedges UNION SELECT u, v FROM iedges),
-    reach_t(u, v) AS (
-      SELECT u, v FROM tedges
-      UNION
-      SELECT r.u, e.v FROM reach_t r JOIN tedges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    reach_i(u, v) AS (
-      SELECT u, v FROM iedges
-      UNION
-      SELECT r.u, e.v FROM reach_i r JOIN iedges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    reach_u(u, v) AS (
-      SELECT u, v FROM uedges
-      UNION
-      SELECT r.u, e.v FROM reach_u r JOIN uedges e ON r.v = e.u
-      WHERE e.v <> r.u),
+      SELECT u, v FROM edges UNION SELECT u, v FROM iedges),
+    {_components_cte(suffix="_t")},
+    {_components_cte(edges="iedges", suffix="_i")},
+    {_components_cte(edges="uedges", suffix="_u")},
     sizes AS (
-      SELECT 'text' AS arm, least(u, min(v)) AS component,
-             CAST(1 AS BIGINT) AS one
-      FROM reach_t GROUP BY u
-      UNION ALL
-      SELECT 'image' AS arm, least(u, min(v)), CAST(1 AS BIGINT)
-      FROM reach_i GROUP BY u
-      UNION ALL
-      SELECT 'pooled' AS arm, least(u, min(v)), CAST(1 AS BIGINT)
-      FROM reach_u GROUP BY u),
+      SELECT 'text' AS arm, component FROM comp_t
+      UNION ALL SELECT 'image', component FROM comp_i
+      UNION ALL SELECT 'pooled', component FROM comp_u),
     comp AS (
       SELECT arm, component, CAST(count(*) AS BIGINT) AS sz
       FROM sizes GROUP BY 1, 2)
@@ -1772,10 +1749,7 @@ def _detector_agreement_sql() -> str:
       FROM bands a
       JOIN bands b ON a.band = b.band AND a.sig = b.sig
                   AND a.doc_id < b.doc_id),
-    shp AS MATERIALIZED (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
+    {_simhash_edges_cte("shp", None, pairs_materialized=True)},
     u AS (
       SELECT coalesce(m.doc_a, s.doc_a) AS doc_a,
              coalesce(m.doc_b, s.doc_b) AS doc_b,
@@ -2099,18 +2073,11 @@ def _pooled_detectors_sql() -> str:
     arms = []
     for arm, etab in (
         ("minhash", "medges"),
-        ("simhash", "sedges"),
+        ("simhash", "edges"),
         ("pooled", "uedges"),
     ):
         arms.append(f"""
-    reach_{arm}(u, v) AS (
-      SELECT u, v FROM {etab}
-      UNION
-      SELECT r.u, e.v FROM reach_{arm} r
-      JOIN {etab} e ON r.v = e.u WHERE e.v <> r.u),
-    comp_{arm} AS (
-      SELECT u, least(u, min(v)) AS component
-      FROM reach_{arm} GROUP BY u),
+    {_components_cte(edges=etab, suffix=f"_{arm}")},
     acc_{arm} AS (
       SELECT '{arm}' AS arm,
              CAST(sum(c) AS BIGINT) AS n_nodes,
@@ -2121,10 +2088,7 @@ def _pooled_detectors_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_EDGES_CTE},
     ksh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-               AS shingle
+      SELECT DISTINCT doc_id, {_TRIGRAMS} AS shingle
       FROM ktoks WHERE len(t) >= 3),
     {_minhash_cte(src="ksh")},
     {_bands_cte()},
@@ -2133,12 +2097,9 @@ def _pooled_detectors_sql() -> str:
       FROM bands a
       JOIN bands b ON a.band = b.band AND a.sig = b.sig
                   AND a.doc_id < b.doc_id),
-    medges AS (
-      SELECT doc_a AS u, doc_b AS v FROM mhp
-      UNION SELECT doc_b, doc_a FROM mhp),
-    sedges AS (SELECT u, v FROM edges),
+    {_sym_edges_cte("medges", "mhp")},
     uedges AS MATERIALIZED (
-      SELECT u, v FROM medges UNION SELECT u, v FROM sedges),
+      SELECT u, v FROM medges UNION SELECT u, v FROM edges),
     {','.join(arms)}
     SELECT arm, n_nodes, n_components, max_size
     FROM (SELECT * FROM acc_minhash

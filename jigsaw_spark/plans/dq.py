@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 from jigsaw_spark.functions.hashing import det_hash
 from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE, _KEEPER_EDGES_CTE
 from jigsaw_spark.plans.mm import _DHASH_PAIRS_CTE, _PHASH_BYTES_CTE, mm_phash_near_dup
-from jigsaw_spark.plans.registry import QUERIES, _t, register
+from jigsaw_spark.plans.registry import QUERIES, _components_cte, _t, register
 
 
 def _holdout_col(doc_id="doc_id"):
@@ -3453,22 +3453,8 @@ def _pooled_leakage_sql() -> str:
       WHERE ka.keeper <> kb.keeper),
     uedges AS MATERIALIZED (
       SELECT u, v FROM edges UNION SELECT u, v FROM ikedges),
-    reach_t(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach_t r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    reach_u(u, v) AS (
-      SELECT u, v FROM uedges
-      UNION
-      SELECT r.u, e.v FROM reach_u r JOIN uedges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp_t AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach_t GROUP BY u),
-    comp_u AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach_u GROUP BY u),
+    {_components_cte(suffix="_t")},
+    {_components_cte(edges="uedges", suffix="_u")},
     lab AS MATERIALIZED (
       SELECT 'text' AS arm, k.doc_id,
              coalesce(c.component, k.keeper) AS cluster,

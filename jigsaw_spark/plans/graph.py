@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jigsaw_spark.operators.text import tokens_sql
 from jigsaw_spark.plans.dedup import (
     _KEEPER_EDGES_CTE,
     _SHINGLES_CTE,
@@ -22,9 +21,10 @@ from jigsaw_spark.plans.dedup import (
     _bands_cte,
     _keeper_cluster_sql,
     _minhash_cte,
+    _simhash_edges_cte,
 )
 from jigsaw_spark.plans.mm import _DHASH_PAIRS_CTE, _PHASH_BYTES_CTE, mm_phash_near_dup
-from jigsaw_spark.plans.registry import _components_cte, _t, register
+from jigsaw_spark.plans.registry import _components_cte, _sym_edges_cte, _t, register
 
 
 @register(
@@ -102,16 +102,8 @@ def _pagerank_exact_sql() -> str:
     the minhash-LSH candidate graph — an ITERATIVE algorithm with an
     exact SQL oracle, possible only because every iteration step is
     integer floor arithmetic (see operators.graph.pagerank_exact)."""
-    from jigsaw_spark.operators.text import tokens_sql
-
     head = f"""
-    WITH toks AS (
-      SELECT doc_id, {tokens_sql('text')} AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
+    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
     {_minhash_cte()},
     {_bands_cte(materialized=True)},
     pairs AS (
@@ -194,16 +186,8 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_edges_cte() -> str:
-    from jigsaw_spark.operators.text import tokens_sql
-
     return f"""
-    toks AS (
-      SELECT doc_id, {tokens_sql('text')} AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
+    {_TOKS_CTE}, {_SHINGLES_CTE},
     {_minhash_cte()},
     {_bands_cte(materialized=True)},
     pairs AS (
@@ -703,14 +687,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _modularity_sql() -> str:
     return f"""
     WITH RECURSIVE {_SIMHASH_KEEPER_CTE},
-    pairs AS MATERIALIZED (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs),
+    {_simhash_edges_cte(
+        "pairs", pairs_materialized=True, edges_materialized=True)},
     {_components_cte(materialized=True)},
     mm AS (SELECT count(*) AS m FROM pairs),
     intra AS (
@@ -1057,14 +1035,7 @@ def _walk_with_clause() -> str:
 
     return f"""
     WITH RECURSIVE {_SIMHASH_KEEPER_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte()},
     adj AS MATERIALIZED (
       SELECT u, list(v ORDER BY v) AS nbrs FROM edges GROUP BY u),
     walk(s, start, node, path) AS (
@@ -1180,14 +1151,7 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _adamic_adar_sql() -> str:
     return f"""
     WITH {_SIMHASH_KEEPER_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte(edges_materialized=True)},
     wt AS MATERIALIZED (
       -- deg-1 nodes can never be a common neighbor of a distinct pair
       -- (being one implies degree >= 2); filter BEFORE dividing so
@@ -1296,14 +1260,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _node2vec_sql() -> str:
     return f"""
     WITH RECURSIVE {_SIMHASH_KEEPER_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    eset AS (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte(edges="eset")},
     adj AS MATERIALIZED (
       SELECT u, list(v ORDER BY v) AS nbrs FROM eset GROUP BY u),
     walk(s, start, prev, node, path) AS (
@@ -1822,14 +1779,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hub_removal_sql() -> str:
     return f"""
     WITH RECURSIVE {_SIMHASH_KEEPER_CTE},
-    prs AS MATERIALIZED (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte(pairs_materialized=True, edges_materialized=True)},
     deg AS (
       SELECT u, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY u),
     hubs AS MATERIALIZED (
@@ -1837,14 +1787,7 @@ def _hub_removal_sql() -> str:
         SELECT u, row_number() OVER (ORDER BY d DESC, u) AS rn
         FROM deg) t
       WHERE rn <= 5),
-    reach_b(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach_b r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp_b AS MATERIALIZED (
-      SELECT u AS node, least(u, min(v)) AS comp
-      FROM reach_b GROUP BY u),
+    {_components_cte("node", "comp", materialized=True, suffix="_b")},
     sizes_b AS (
       SELECT comp, CAST(count(*) AS BIGINT) AS sz
       FROM comp_b GROUP BY comp),
@@ -1852,14 +1795,8 @@ def _hub_removal_sql() -> str:
       SELECT e.u, e.v FROM edges e
       WHERE NOT EXISTS (SELECT 1 FROM hubs h WHERE h.u = e.u)
         AND NOT EXISTS (SELECT 1 FROM hubs h WHERE h.u = e.v)),
-    reach_a(u, v) AS (
-      SELECT u, v FROM kept
-      UNION
-      SELECT r.u, k.v FROM reach_a r JOIN kept k ON r.v = k.u
-      WHERE k.v <> r.u),
-    comp_a AS MATERIALIZED (
-      SELECT u AS node, least(u, min(v)) AS comp
-      FROM reach_a GROUP BY u),
+    {_components_cte(
+        "node", "comp", materialized=True, edges="kept", suffix="_a")},
     sizes_a AS (
       SELECT comp, CAST(count(*) AS BIGINT) AS sz
       FROM comp_a GROUP BY comp),
@@ -2596,37 +2533,20 @@ def _bridge_frag_sql() -> str:
       FROM prs p
       JOIN edges e1 ON e1.u = p.doc_a
       JOIN edges e2 ON e2.u = p.doc_b AND e2.v = e1.v),
-    cedges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM closed
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM closed),
-    reach_full(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach_full r JOIN edges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp_full AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach_full GROUP BY u),
-    reach_corr(u, v) AS (
-      SELECT u, v FROM cedges
-      UNION
-      SELECT r.u, e.v FROM reach_corr r JOIN cedges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp_corr0 AS (
-      SELECT u AS doc_id, least(u, min(v)) AS component
-      FROM reach_corr GROUP BY u),
+    {_sym_edges_cte("cedges", "closed", materialized=True)},
+    {_components_cte(suffix="_full")},
+    {_components_cte(edges="cedges", suffix="_corr")},
     universe AS (SELECT DISTINCT u AS doc_id FROM edges),
-    comp_corr AS (
+    lab_corr AS (
       SELECT un.doc_id, coalesce(c.component, un.doc_id) AS component
-      FROM universe un LEFT JOIN comp_corr0 c ON un.doc_id = c.doc_id),
+      FROM universe un LEFT JOIN comp_corr c ON un.doc_id = c.doc_id),
     sizes AS (
       SELECT 'full' AS arm, component, CAST(count(*) AS BIGINT) AS sz
       FROM comp_full GROUP BY component
       UNION ALL
       SELECT 'corroborated' AS arm, component,
              CAST(count(*) AS BIGINT) AS sz
-      FROM comp_corr GROUP BY component)
+      FROM lab_corr GROUP BY component)
     SELECT arm,
            CAST(sum(sz) AS BIGINT) AS n_nodes,
            CAST(count(*) AS BIGINT) AS n_components,
@@ -2803,21 +2723,14 @@ _DEPTH_CAP = 8
 def _component_depth_sql() -> str:
     arms = []
     for arm, etab in (
-        ("text", "tedges"),
+        ("text", "edges"),
         ("image", "iedges"),
         ("pooled", "uedges"),
     ):
         stages = [f"""
-    reach_{arm}(u, v) AS (
-      SELECT u, v FROM {etab}
-      UNION
-      SELECT r.u, e.v FROM reach_{arm} r
-      JOIN {etab} e ON r.v = e.u WHERE e.v <> r.u),
-    mins_{arm} AS (
-      SELECT u AS node, least(u, min(v)) AS component
-      FROM reach_{arm} GROUP BY u),
+    {_components_cte("node", edges=etab, suffix=f"_{arm}")},
     d0_{arm} AS (
-      SELECT DISTINCT component AS node, 0 AS dist FROM mins_{arm})"""]
+      SELECT DISTINCT component AS node, 0 AS dist FROM comp_{arm})"""]
         for t in range(1, _DEPTH_CAP + 1):
             stages.append(f"""
     d{t}_{arm} AS MATERIALIZED (
@@ -2831,19 +2744,16 @@ def _component_depth_sql() -> str:
     lab_{arm} AS (
       SELECT '{arm}' AS arm,
              coalesce(d.dist, {_DEPTH_CAP + 1}) AS depth
-      FROM mins_{arm} m
+      FROM comp_{arm} m
       LEFT JOIN d{_DEPTH_CAP}_{arm} d ON m.node = d.node)""")
         arms.append(",".join(stages))
     return f"""
     WITH RECURSIVE {_KEEPER_EDGES_CTE},
     {_PHASH_BYTES_CTE.strip()},
     {_DHASH_PAIRS_CTE},
-    tedges AS (SELECT u, v FROM edges),
-    iedges AS MATERIALIZED (
-      SELECT doc_a AS u, doc_b AS v FROM mpairs
-      UNION SELECT doc_b AS u, doc_a AS v FROM mpairs),
+    {_sym_edges_cte("iedges", "mpairs", materialized=True)},
     uedges AS MATERIALIZED (
-      SELECT u, v FROM tedges UNION SELECT u, v FROM iedges),
+      SELECT u, v FROM edges UNION SELECT u, v FROM iedges),
     {','.join(arms)},
     allarms AS (
       SELECT * FROM lab_text

@@ -26,7 +26,7 @@ from jigsaw_spark.multimodal.binary_ops import (
     mask_to_bboxes,
 )
 from jigsaw_spark.operators.similarity import srp_buckets
-from jigsaw_spark.plans.registry import _components_cte, _t, register
+from jigsaw_spark.plans.registry import _components_cte, _sym_edges_cte, _t, register
 
 
 def _as_binary_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
@@ -921,9 +921,7 @@ def _phash_components_sql() -> str:
     return f"""
     WITH RECURSIVE {_PHASH_BYTES_CTE},
     {_DHASH_PAIRS_CTE},
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM mpairs
-      UNION SELECT doc_b AS u, doc_a AS v FROM mpairs),
+    {_sym_edges_cte("edges", "mpairs")},
     {_components_cte("img")},
     universe AS (SELECT DISTINCT i AS img FROM ph_bytes),
     labeled AS (
@@ -1009,17 +1007,8 @@ def _phash_cluster_sources_sql() -> str:
     return f"""
     WITH RECURSIVE {_PHASH_BYTES_CTE.strip()},
     {_DHASH_PAIRS_CTE},
-    iedges AS (
-      SELECT doc_a AS u, doc_b AS v FROM mpairs
-      UNION SELECT doc_b AS u, doc_a AS v FROM mpairs),
-    reach(u, v) AS (
-      SELECT u, v FROM iedges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN iedges e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp AS (
-      SELECT u AS img, least(u, min(v)) AS component
-      FROM reach GROUP BY u),
+    {_sym_edges_cte("iedges", "mpairs")},
+    {_components_cte("img", edges="iedges")},
     universe AS (SELECT DISTINCT i AS img FROM ph_bytes),
     lab AS (
       SELECT un.img, coalesce(c.component, un.img) AS component,
@@ -1241,14 +1230,7 @@ def _threshold_purity_sql() -> str:
     edges_{t} AS (
       SELECT ia AS u, ib AS v FROM ham WHERE hamming <= {t}
       UNION SELECT ib, ia FROM ham WHERE hamming <= {t}),
-    reach_{t}(u, v) AS (
-      SELECT u, v FROM edges_{t}
-      UNION
-      SELECT r.u, e.v FROM reach_{t} r JOIN edges_{t} e ON r.v = e.u
-      WHERE e.v <> r.u),
-    comp_{t} AS (
-      SELECT u AS img, least(u, min(v)) AS component
-      FROM reach_{t} GROUP BY u)""")
+    {_components_cte("img", edges=f"edges_{t}", suffix=f"_{t}")}""")
         labs.append(f"""
       SELECT {t} AS threshold,
              coalesce(c.component, un.img) AS component, d.source

@@ -34,7 +34,11 @@ from jigsaw_spark.plans.curation import (
     _gate_flags_sql,
     _gate_ok_col,
 )
-from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE, _SIMHASH_CTE
+from jigsaw_spark.plans.dedup import (
+    _KEEPER_COMPONENTS_CTE,
+    _SIMHASH_CTE,
+    _simhash_edges_cte,
+)
 from jigsaw_spark.plans.registry import _components_cte, _t, dec2, dsum, register
 
 
@@ -1020,14 +1024,7 @@ def p_rolling_origin_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lss_sql() -> str:
     return f"""
     WITH RECURSIVE {_SIMHASH_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte()},
     {_components_cte("doc_id", "keeper", materialized=True)},
     assigned AS (
       SELECT d.doc_id,
@@ -1087,14 +1084,7 @@ def p_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _gkf_sql() -> str:
     return f"""
     WITH RECURSIVE {_SIMHASH_CTE},
-    prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs),
+    {_simhash_edges_cte()},
     {_components_cte("doc_id", "keeper", materialized=True)},
     assigned AS (
       SELECT d.doc_id,

@@ -1,5 +1,5 @@
-"""The query registry leaf: ``QuerySpec``, ``QUERIES``, ``register`` and the
-exact-arithmetic helpers every family shares.
+"""The query registry leaf: ``QuerySpec``, ``QUERIES``, ``register``, the
+exact-arithmetic helpers and the DuckDB oracle shapes every family shares.
 
 Nothing here imports from ``jigsaw_spark.plans``, so any family module can be
 the first import of an interpreter.
@@ -105,20 +105,45 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _TDIV = "CASE WHEN {x} >= 0 THEN {x} // {d} ELSE -((-({x})) // {d}) END"
 
 
+# The word-trigram shingles of a token list ``t`` (needs ``len(t) >= 3``),
+# one row per position, as a DuckDB select-list expression.
+_TRIGRAMS = (
+    "unnest(list_transform(range(1, len(t) - 1), "
+    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
+)
+
+
+def _sym_edges_cte(
+    name: str = "edges", pairs: str = "pairs", materialized: bool = False
+) -> str:
+    """``name(u, v)``: both directions of every ``pairs(doc_a, doc_b)`` row,
+    as one DuckDB CTE."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{name} AS{mat} (
+      SELECT doc_a AS u, doc_b AS v FROM {pairs}
+      UNION
+      SELECT doc_b AS u, doc_a AS v FROM {pairs})"""
+
+
 def _components_cte(
-    node: str = "doc_id", label: str = "component", materialized: bool = False
+    node: str = "doc_id",
+    label: str = "component",
+    materialized: bool = False,
+    edges: str = "edges",
+    suffix: str = "",
 ) -> str:
     """Connected components of a symmetric ``edges(u, v)`` CTE, as two DuckDB
-    CTEs for a ``WITH RECURSIVE`` block: ``reach(u, v)`` holds every node
-    reachable from ``u``, and ``comp`` labels each node that has an edge
-    with the least id in its component (columns ``node``, ``label``). Nodes
-    without an edge get no row; callers coalesce them to themselves."""
+    CTEs for a ``WITH RECURSIVE`` block: ``reach{suffix}(u, v)`` holds every
+    node reachable from ``u``, and ``comp{suffix}`` labels each node that has
+    an edge with the least id in its component (columns ``node``,
+    ``label``). Nodes without an edge get no row; callers coalesce them to
+    themselves."""
     mat = " MATERIALIZED" if materialized else ""
-    return f"""reach(u, v) AS (
-      SELECT u, v FROM edges
+    return f"""reach{suffix}(u, v) AS (
+      SELECT u, v FROM {edges}
       UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+      SELECT r.u, e.v FROM reach{suffix} r JOIN {edges} e ON r.v = e.u
       WHERE e.v <> r.u),
-    comp AS{mat} (
+    comp{suffix} AS{mat} (
       SELECT u AS {node}, least(u, min(v)) AS {label}
-      FROM reach GROUP BY u)"""
+      FROM reach{suffix} GROUP BY u)"""

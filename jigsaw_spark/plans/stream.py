@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from jigsaw_spark.operators.text import tokens_sql
 from jigsaw_spark.plans.curation import _DSIR_B
-from jigsaw_spark.plans.dedup import _bands_cte, _minhash_cte
+from jigsaw_spark.plans.dedup import _SHINGLES_CTE, _TOKS_CTE, _bands_cte, _minhash_cte
 from jigsaw_spark.plans.dq import _holdout_col
 from jigsaw_spark.plans.mm import _PHASH_BYTES_CTE, _phash_images, _synth_images
 from jigsaw_spark.plans.registry import _t, dec2, dsum, register
@@ -339,13 +339,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_lsh_dedup",
     f"""
-    WITH toks AS (
-      SELECT doc_id, {tokens_sql('text')} AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
+    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
     {_minhash_cte()},
     {_bands_cte(materialized=True)},
     idx AS (

@@ -44,7 +44,7 @@ from jigsaw_spark.operators.text import (
     tokens_sql,
 )
 from jigsaw_spark.plans.dedup import _SHINGLES_CTE, _TOKS_CTE
-from jigsaw_spark.plans.registry import QUERIES, _t, register
+from jigsaw_spark.plans.registry import _TRIGRAMS, QUERIES, _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -1164,10 +1164,7 @@ _install_langid_confusion_oracle()
       SELECT doc_id, source, {tokens_sql('text')} AS t FROM documents
     ),
     tri AS (
-      SELECT source,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g
-      FROM toks WHERE len(t) >= 3
+      SELECT source, {_TRIGRAMS} AS g FROM toks WHERE len(t) >= 3
     )
     SELECT source,
            count(*) AS n_trigrams,
@@ -1664,10 +1661,7 @@ def _repetition_sql() -> str:
     return f"""
     WITH toks AS (SELECT doc_id, {tokens_sql('text')} AS t FROM documents),
     shn AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
+      SELECT doc_id, {_TRIGRAMS} AS shingle FROM toks WHERE len(t) >= 3),
     cnt AS (SELECT doc_id, shingle, count(*) AS c FROM shn GROUP BY 1, 2)
     SELECT doc_id,
            CAST(sum(c) AS BIGINT) AS n_grams,
