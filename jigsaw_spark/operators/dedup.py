@@ -158,7 +158,7 @@ def _keeper_sig_frame(
 
 
 def keeper_frames(
-    df: DataFrame, key: str = "doc_id", with_text: bool = False
+    df: DataFrame, key: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """(ded, pairs): ONE checkpointed exact-dedup pass shared by the
     keeper fold and the pair graph. Queries that need both the
@@ -166,33 +166,18 @@ def keeper_frames(
     were paying the fp window twice — Spark cannot dedupe the two
     identical window subtrees — so this materializes the window once
     (r13 optimization; one full-text shuffle instead of two at any
-    scale).
+    scale). A per-doc near-dup cluster label is
+    :func:`near_dup_keepers`, not a fold over these two frames.
 
-    Default (r14): tokens, fingerprint and SimHash signature are all
+    Tokens, fingerprint and SimHash signature are all
     computed MAP-SIDE in one kernel pass and the fp window runs over
     (key, fp, simhash) rows, so text never crosses an exchange and
     the checkpoint is the narrow (key, keeper, is_dup, simhash)
     frame — no text payload in executor storage — and ``pairs``
     re-derives from it with JVM banding only (no Python kernel on
-    re-reference). ``ded`` carries (key, keeper, is_dup).
-
-    ``with_text=True`` keeps the previous wide form for the consumers
-    that read keeper text downstream: ``ded`` then carries (key,
-    keeper, is_dup, text) and pairs run the kernel off the checkpoint.
-    Pair sets are identical between the two forms (same tokens → same
-    signatures → same banding)."""
-    if with_text:
-        ded = (
-            exact_dedup(df, key)
-            .select(key, "keeper", "is_dup", "text")
-            .localCheckpoint()
-        )
-        pairs = simhash_pairs(
-            ded.filter(~F.col("is_dup")).select(key, "text"),
-            key,
-            max_hamming=2,
-        ).select("doc_a", "doc_b")
-        return ded, pairs
+    re-reference). ``ded`` carries (key, keeper, is_dup); a consumer
+    that reads keeper text semi-joins the keeper ids back to the
+    corpus."""
     frame = _keeper_sig_frame(df, key).localCheckpoint()
     ded = frame.select(key, "keeper", "is_dup")
     pairs = _pairs_from_sigs(
@@ -1333,7 +1318,8 @@ def near_dup_keepers(
     fingerprint md5('') but carry no signal, and the signature relation
     (like the certified SQL oracles) drops them — no edges, so each is
     its own singleton keeper, not one arbitrary-min cluster (r6
-    advisor)."""
+    advisor). The DuckDB twin is ``_keeper_cluster_cte`` in
+    plans/dedup.py."""
     # ONE materialized pass: ek and the pair banding both reference the
     # narrow (key, keeper, is_dup, simhash) frame — Spark cannot dedupe
     # the two identical fp-window subtrees (r13, the keeper_frames

@@ -21,7 +21,7 @@ from jigsaw_spark.operators.similarity import (
     srp_planes,
     srp_signature_sql,
 )
-from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE
+from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE, _keeper_cluster_cte
 from jigsaw_spark.plans.registry import _t, register
 
 
@@ -1711,12 +1711,7 @@ def emb_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _recall_under_dedup_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
-    keeper_of AS (
-      SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
-      FROM fpt),
-    clust AS MATERIALIZED (
-      SELECT k.doc_id, coalesce(c.component, k.keeper) AS cluster
-      FROM keeper_of k LEFT JOIN comp c ON k.keeper = c.doc_id),
+    {_keeper_cluster_cte(materialized=True)},
     surv AS MATERIALIZED (
       SELECT doc_id FROM clust WHERE doc_id = cluster),
     q AS (
@@ -1792,29 +1787,14 @@ def _recall_under_dedup_sql() -> str:
 def ann_recall_under_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
     from jigsaw_spark.operators.similarity import cosine_topk
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    # one exact-dedup pass shared by the keeper fold and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    keeper_of = ded.select("doc_id", "keeper")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select(
-        F.col("doc_id").alias("keeper"),
-        F.col("component").alias("c0"),
-    )
     clust = (
-        keeper_of.join(comp, "keeper", "left")
-        .select(
-            "doc_id",
-            F.coalesce("c0", F.col("keeper")).alias("cluster"),
-        )
+        near_dup_keepers(docs, "doc_id")
+        .select("doc_id", F.col("keeper").alias("cluster"))
         .localCheckpoint()
     )
     surv = clust.filter(F.col("doc_id") == F.col("cluster")).select(

@@ -29,6 +29,7 @@ from jigsaw_spark.plans.dedup import (
     _KEEPER_COMPONENTS_CTE,
     _PRE_SQL,
     _TOKS_CTE,
+    _keeper_cluster_cte,
     _keeper_cluster_sql,
     _pre_lines,
 )
@@ -869,12 +870,12 @@ def curation_cluster_extinction(
     )
 
     docs = _t(spark, sf_dir, "documents")
-    # one exact-dedup pass shared by the gate universe and the pair graph
-    # (with_text: the gate reads keeper text downstream)
-    ded, kpairs = keeper_frames(docs, "doc_id", with_text=True)
+    # one exact-dedup pass shared by the gate universe and the pair graph;
+    # the gate reads keeper text through a semi-join on the keeper ids
+    ded, kpairs = keeper_frames(docs, "doc_id")
     keepers = (
-        ded.filter(~F.col("is_dup"))
-        .select("doc_id", "text")
+        docs.select("doc_id", "text")
+        .join(ded.filter(~F.col("is_dup")), "doc_id", "left_semi")
         .withColumn("t", tokens_expr("text"))
     )
     grams = shingles_expr("t", 3)
@@ -1140,12 +1141,7 @@ def _gate_ok_col(docs: DataFrame, *extra: str) -> DataFrame:
 def _gate_dup_overlap_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
-    keeper_of AS (
-      SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
-      FROM fpt),
-    clust AS (
-      SELECT k.doc_id, coalesce(c.component, k.keeper) AS cluster
-      FROM keeper_of k LEFT JOIN comp c ON k.keeper = c.doc_id),
+    {_keeper_cluster_cte()},
     csz AS (
       SELECT cluster, CAST(count(*) AS BIGINT) AS sz
       FROM clust GROUP BY 1),
@@ -1199,25 +1195,12 @@ def _gate_dup_overlap_sql() -> str:
 def curation_gate_dup_overlap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
     from jigsaw_spark.session import widen
 
     docs = widen(_t(spark, sf_dir, "documents"))
-    # one exact-dedup pass shared by the keeper fold and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    keeper_of = ded.select("doc_id", "keeper")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select(
-        F.col("doc_id").alias("keeper"),
-        F.col("component").alias("c0"),
-    )
-    clust = keeper_of.join(comp, "keeper", "left").select(
-        "doc_id",
-        F.coalesce("c0", F.col("keeper")).alias("cluster"),
+    clust = near_dup_keepers(docs, "doc_id").select(
+        "doc_id", F.col("keeper").alias("cluster")
     )
     # cluster-partitioned window count instead of groupBy + join-back:
     # `clust` (whose lineage holds the fp window AND the union-find

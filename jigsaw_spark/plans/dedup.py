@@ -3,7 +3,8 @@ SimHash, embedding and cross-modal near-dup detection and their audits.
 
 The DuckDB twins of the shared keeper machinery (``_TOKS_CTE``,
 ``_SHINGLES_CTE``, ``_SIMHASH_CTE``, ``_SIMHASH_KEEPER_CTE``,
-``_KEEPER_EDGES_CTE``, ``_KEEPER_COMPONENTS_CTE``, ``_keeper_cluster_sql``),
+``_KEEPER_EDGES_CTE``, ``_KEEPER_COMPONENTS_CTE``, ``_keeper_cluster_cte``,
+``_keeper_cluster_sql``),
 the SimHash pair CTE (``_simhash_edges_cte``) and the MinHash band CTEs
 live here and are imported by the families that build on keepers.
 
@@ -259,6 +260,24 @@ _KEEPER_EDGES_CTE = f"""{_SIMHASH_KEEPER_CTE},
 # ``WITH RECURSIVE`` block.
 _KEEPER_COMPONENTS_CTE = f"""{_KEEPER_EDGES_CTE},
     {_components_cte()}"""
+
+
+def _keeper_cluster_cte(
+    name: str = "clust", materialized: bool = False, label: str = "cluster"
+) -> str:
+    """``name(doc_id, label)``: every document's near-dup cluster, the DuckDB
+    twin of operators/dedup.near_dup_keepers, over the ``fpt`` and ``comp``
+    CTEs of ``_KEEPER_COMPONENTS_CTE``. A doc maps to its exact keeper's
+    component, or to the keeper when it has no edge; a doc without tokens
+    (empty or NULL text) is its own cluster (FIXTURES.md §9)."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{name} AS{mat} (
+      SELECT k.doc_id,
+             CASE WHEN len(k.t) > 0 THEN coalesce(c.component, k.keeper)
+                  ELSE k.doc_id END AS {label}
+      FROM (SELECT doc_id, t, min(doc_id) OVER (PARTITION BY fp) AS keeper
+            FROM fpt) k
+      LEFT JOIN comp c ON k.keeper = c.doc_id)"""
 
 
 @register(
@@ -1015,18 +1034,12 @@ _install_dedup_impact_oracle()
 
 
 def _keeper_cluster_sql() -> str:
-    """Shared oracle CTE chain: doc → near-dup cluster keeper → cluster
-    sizes. The oracle builds the SimHash graph over ALL docs (the
-    semantic spec); Spark runs the exact-dedup-first composition, which
-    is result-identical (see near_dup_keepers)."""
+    """Shared oracle CTE chain: doc → near-dup cluster keeper
+    (``assigned``) → cluster sizes (``clusters``)."""
 
     return f"""
-    WITH RECURSIVE {_SIMHASH_CTE},
-    {_simhash_edges_cte()},
-    {_components_cte("doc_id", "keeper", materialized=True)},
-    assigned AS MATERIALIZED (
-      SELECT d.doc_id, coalesce(c.keeper, d.doc_id) AS keeper
-      FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
+    {_keeper_cluster_cte("assigned", materialized=True, label="keeper")},
     clusters AS MATERIALIZED (
       SELECT keeper, count(*) AS cluster_size
       FROM assigned GROUP BY keeper)
@@ -2140,9 +2153,12 @@ def dedup_pooled_text_detectors(
     docs = _t(spark, sf_dir, "documents")
     # ONE exact-dedup pass shared by both detector arms (keeper_pairs
     # would re-run the fp window for its own keepers — Spark cannot
-    # dedupe the two identical window subtrees across the arms)
-    ded, kpairs = keeper_frames(docs, "doc_id", with_text=True)
-    keepers = ded.filter(~F.col("is_dup")).select("doc_id", "text")
+    # dedupe the two identical window subtrees across the arms); the
+    # MinHash arm reads keeper text through a semi-join on the keeper ids
+    ded, kpairs = keeper_frames(docs, "doc_id")
+    keepers = docs.select("doc_id", "text").join(
+        ded.filter(~F.col("is_dup")), "doc_id", "left_semi"
+    )
     mhp = (
         minhash_lsh_pairs(keepers, "doc_id")
         .select("doc_a", "doc_b")

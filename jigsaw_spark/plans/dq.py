@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from jigsaw_spark.functions.hashing import det_hash
-from jigsaw_spark.plans.dedup import _KEEPER_COMPONENTS_CTE, _KEEPER_EDGES_CTE
+from jigsaw_spark.plans.dedup import (
+    _KEEPER_COMPONENTS_CTE,
+    _KEEPER_EDGES_CTE,
+    _keeper_cluster_cte,
+)
 from jigsaw_spark.plans.mm import _DHASH_PAIRS_CTE, _PHASH_BYTES_CTE, mm_phash_near_dup
 from jigsaw_spark.plans.registry import QUERIES, _components_cte, _t, register
 
@@ -3294,17 +3298,11 @@ def dq_repair_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_leakage_sql() -> str:
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
-    -- every doc -> its exact keeper (fp min) -> the keeper's component
-    keeper_of AS (
-      SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
-      FROM fpt),
+    {_keeper_cluster_cte()},
     lab AS MATERIALIZED (
-      SELECT k.doc_id,
-             coalesce(c.component, k.keeper) AS cluster,
-             CAST(CAST(('0x' || substr(md5('contam|'
-               || CAST(k.doc_id AS VARCHAR)), 1, 12)) AS UBIGINT)
-               % CAST(20 AS UBIGINT) AS BIGINT) = 0 AS is_holdout
-      FROM keeper_of k LEFT JOIN comp c ON k.keeper = c.doc_id),
+      SELECT doc_id, cluster,
+             {_HOLDOUT_SQL.format(d="doc_id")} AS is_holdout
+      FROM clust),
     cl AS MATERIALIZED (
       SELECT cluster,
              CAST(count(*) AS BIGINT) AS n_docs,
@@ -3354,28 +3352,12 @@ def _cluster_leakage_sql() -> str:
 def dq_split_cluster_leakage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
 
     docs = _t(spark, sf_dir, "documents")
-    # one exact-dedup pass shared by the keeper fold and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    keeper_of = ded.select("doc_id", "keeper")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select(
-        F.col("doc_id").alias("keeper"),
-        F.col("component").alias("c0"),
-    )
-    lab = (
-        keeper_of.join(comp, "keeper", "left")
-        .select(
-            "doc_id",
-            F.coalesce("c0", F.col("keeper")).alias("cluster"),
-            _holdout_col().alias("is_holdout"),
-        )
+    lab = near_dup_keepers(docs, "doc_id").select(
+        F.col("keeper").alias("cluster"),
+        _holdout_col().alias("is_holdout"),
     )
     cl = lab.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -4079,9 +4061,7 @@ def _leak_overlap_sql() -> str:
     hold = _HOLDOUT_SQL.format(d="doc_id")
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
-    keeper_of AS (
-      SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
-      FROM fpt),
+    {_keeper_cluster_cte()},
     split AS MATERIALIZED (
       SELECT doc_id, {hold} AS is_holdout FROM documents),
     dg AS MATERIALIZED (
@@ -4095,11 +4075,8 @@ def _leak_overlap_sql() -> str:
       JOIN split s ON g.doc_id = s.doc_id
       JOIN tsh h ON g.sh = h.sh WHERE s.is_holdout),
     lab AS (
-      SELECT k.doc_id, coalesce(c.component, k.keeper) AS cluster,
-             s.is_holdout
-      FROM keeper_of k
-      LEFT JOIN comp c ON k.keeper = c.doc_id
-      JOIN split s ON k.doc_id = s.doc_id),
+      SELECT k.doc_id, k.cluster, s.is_holdout
+      FROM clust k JOIN split s ON k.doc_id = s.doc_id),
     strad AS MATERIALIZED (
       SELECT cluster FROM lab GROUP BY cluster
       HAVING sum(CASE WHEN is_holdout THEN 1 ELSE 0 END) > 0
@@ -4149,10 +4126,7 @@ def _leak_overlap_sql() -> str:
 def dq_leak_detector_overlap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
     from jigsaw_spark.operators.text import shingles_expr, tokens_expr
     from jigsaw_spark.session import widen
 
@@ -4182,18 +4156,9 @@ def dq_leak_detector_overlap(
         .distinct()
         .withColumn("g", F.lit(1))
     )
-    # one exact-dedup pass shared by the keeper fold and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    keeper_of = ded.select("doc_id", "keeper")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select(
-        F.col("doc_id").alias("keeper"),
-        F.col("component").alias("c0"),
-    )
-    lab = keeper_of.join(comp, "keeper", "left").select(
+    lab = near_dup_keepers(docs, "doc_id").select(
         "doc_id",
-        F.coalesce("c0", F.col("keeper")).alias("cluster"),
+        F.col("keeper").alias("cluster"),
         _holdout_col().alias("is_holdout"),
     )
     # straddling-cluster membership via a cluster-partitioned window
@@ -4360,16 +4325,10 @@ def _cluster_repair_sql() -> str:
     hold = _HOLDOUT_SQL.format(d="k.doc_id")
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
-    keeper_of AS (
-      SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS keeper
-      FROM fpt),
+    {_keeper_cluster_cte()},
     lab AS MATERIALIZED (
-      SELECT k.doc_id, d.source,
-             coalesce(c.component, k.keeper) AS cluster,
-             {hold} AS is_holdout
-      FROM keeper_of k
-      LEFT JOIN comp c ON k.keeper = c.doc_id
-      JOIN documents d ON k.doc_id = d.doc_id),
+      SELECT k.doc_id, d.source, k.cluster, {hold} AS is_holdout
+      FROM clust k JOIN documents d ON k.doc_id = d.doc_id),
     csides AS MATERIALIZED (
       SELECT cluster,
              CAST(count(*) AS BIGINT) AS sz,
@@ -4461,28 +4420,16 @@ def dq_cluster_safe_repair(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from jigsaw_spark.functions.hashing import md5_key
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
 
     docs = _t(spark, sf_dir, "documents")
-    # one exact-dedup pass shared by the keeper fold and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    keeper_of = ded.select("doc_id", "keeper")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select(
-        F.col("doc_id").alias("keeper"),
-        F.col("component").alias("c0"),
-    )
     lab = (
-        keeper_of.join(comp, "keeper", "left")
+        near_dup_keepers(docs, "doc_id")
         .join(docs.select("doc_id", "source"), "doc_id")
         .select(
             "doc_id",
             "source",
-            F.coalesce("c0", F.col("keeper")).alias("cluster"),
+            F.col("keeper").alias("cluster"),
             _holdout_col().alias("is_holdout"),
         )
         .localCheckpoint()

@@ -36,10 +36,9 @@ from jigsaw_spark.plans.curation import (
 )
 from jigsaw_spark.plans.dedup import (
     _KEEPER_COMPONENTS_CTE,
-    _SIMHASH_CTE,
-    _simhash_edges_cte,
+    _keeper_cluster_cte,
 )
-from jigsaw_spark.plans.registry import _components_cte, _t, dec2, dsum, register
+from jigsaw_spark.plans.registry import _t, dec2, dsum, register
 
 
 # ---------------------------------------------------------------------------
@@ -1023,13 +1022,8 @@ def p_rolling_origin_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lss_sql() -> str:
     return f"""
-    WITH RECURSIVE {_SIMHASH_CTE},
-    {_simhash_edges_cte()},
-    {_components_cte("doc_id", "keeper", materialized=True)},
-    assigned AS (
-      SELECT d.doc_id,
-             coalesce(c.keeper, d.doc_id) AS keeper
-      FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
+    {_keeper_cluster_cte("assigned", label="keeper")}
     SELECT doc_id, CAST(keeper AS BIGINT) AS keeper,
            CASE WHEN ('0x' || substr(
                   {md5_key_sql(['keeper'], seed='lss')}, 1, 12))::UBIGINT
@@ -1051,10 +1045,10 @@ def _lss_sql() -> str:
     "of the KEEPER id (8/10 train). Composes the components operator "
     "+ one left join + map-only assignment; the split remains stable "
     "as clusters grow (keeper = min id is monotone under unions). "
-    "Spark runs the graph EXACT-DEDUP-FIRST (r6 scale fix): byte-"
-    "identical copies collapse before SimHash pairing, so duplication "
-    "can never densify the pair graph into x|copies|² cliques (the "
-    "15.6x probe). Result-identical to the oracle's all-docs graph: "
+    "Both engines run the graph EXACT-DEDUP-FIRST (r6 scale fix): "
+    "byte-identical copies collapse before SimHash pairing, so "
+    "duplication can never densify the pair graph into x|copies|² "
+    "cliques (the 15.6x probe). Result-identical to an all-docs graph: "
     "exact dups share a signature, so every edge through a dup is "
     "mirrored through its keeper, components and minima are unchanged.",
 )
@@ -1083,13 +1077,8 @@ def p_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _gkf_sql() -> str:
     return f"""
-    WITH RECURSIVE {_SIMHASH_CTE},
-    {_simhash_edges_cte()},
-    {_components_cte("doc_id", "keeper", materialized=True)},
-    assigned AS (
-      SELECT d.doc_id,
-             coalesce(c.keeper, d.doc_id) AS keeper
-      FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
+    WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
+    {_keeper_cluster_cte("assigned", label="keeper")}
     SELECT doc_id, CAST(keeper AS BIGINT) AS keeper,
            CAST(('0x' || substr(
                   {md5_key_sql(['keeper'], seed='gkf')}, 1, 12))::UBIGINT
@@ -1969,24 +1958,16 @@ def _dedup_mix_sql() -> str:
       FROM base_{arm})""")
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
-    -- survivor = exact keeper (in ktoks, the fp-min window of the
-    -- keeper CTE) AND the min id of its near-dup component
-    keep AS (
-      SELECT d.doc_id, d.source, len(k.t) AS ntok,
-             coalesce(c.component, k.doc_id) = k.doc_id AS is_keeper
-      FROM documents d
-      JOIN ktoks k ON d.doc_id = k.doc_id
-      LEFT JOIN comp c ON k.doc_id = c.doc_id),
-    rawt AS (
-      SELECT d.doc_id, d.source, len(t.t) AS ntok
-      FROM documents d JOIN toks t ON d.doc_id = t.doc_id),
+    -- survivor = the doc its near-dup cluster is named after
+    {_keeper_cluster_cte()},
     src AS MATERIALIZED (
-      SELECT r.source,
-             CAST(sum(r.ntok) AS BIGINT) AS raw_tokens,
-             CAST(coalesce((SELECT sum(k.ntok) FROM keep k
-               WHERE k.source = r.source AND k.is_keeper), 0)
-               AS BIGINT) AS keeper_tokens
-      FROM rawt r GROUP BY 1),
+      SELECT d.source,
+             CAST(sum(len(t.t)) AS BIGINT) AS raw_tokens,
+             CAST(sum(CASE WHEN c.cluster = c.doc_id THEN len(t.t)
+               ELSE 0 END) AS BIGINT) AS keeper_tokens
+      FROM documents d JOIN toks t ON d.doc_id = t.doc_id
+      JOIN clust c ON d.doc_id = c.doc_id
+      GROUP BY 1),
     tot AS (
       SELECT CAST(sum(raw_tokens) AS BIGINT) AS rt,
              CAST(sum(keeper_tokens) AS BIGINT) AS kt
@@ -2026,10 +2007,7 @@ def _dedup_mix_sql() -> str:
     "scalars; exact integers throughout",
 )
 def p_dedup_aware_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
     from jigsaw_spark.operators.text import tokens_expr
     from jigsaw_spark.session import widen
 
@@ -2037,26 +2015,9 @@ def p_dedup_aware_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntok = docs.select(
         "doc_id", "source", F.size(tokens_expr("text")).alias("ntok")
     )
-    # C4-ordered survivors: exact keepers first, then the min id of
-    # each near-dup component over the shared keeper graph — ONE
-    # exact-dedup pass shared by the flags and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    exact = ded.select("doc_id", "is_dup")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select("doc_id", F.col("component").alias("c0"))
-    keep = (
-        exact.join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            (
-                ~F.col("is_dup")
-                & (
-                    F.coalesce("c0", F.col("doc_id"))
-                    == F.col("doc_id")
-                )
-            ).alias("is_keeper"),
-        )
+    # survivor = the doc its near-dup cluster is named after
+    keep = near_dup_keepers(docs, "doc_id").select(
+        "doc_id", (F.col("keeper") == F.col("doc_id")).alias("is_keeper")
     )
     src = (
         ntok.join(keep, "doc_id")
@@ -2349,12 +2310,13 @@ def _curated_mix_sql() -> str:
       FROM base_{arm})""")
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
+    {_keeper_cluster_cte()},
     keep AS (
-      SELECT d.doc_id, d.source, len(k.t) AS ntok
+      SELECT d.doc_id, d.source, len(t.t) AS ntok
       FROM documents d
-      JOIN ktoks k ON d.doc_id = k.doc_id
-      LEFT JOIN comp c ON k.doc_id = c.doc_id
-      WHERE coalesce(c.component, k.doc_id) = k.doc_id),
+      JOIN toks t ON d.doc_id = t.doc_id
+      JOIN clust c ON d.doc_id = c.doc_id
+      WHERE c.cluster = c.doc_id),
     {_gate_flags_sql()},
     src AS MATERIALIZED (
       SELECT k.source,
@@ -2402,10 +2364,7 @@ def _curated_mix_sql() -> str:
 def p_curated_budget_mix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_frames,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
     from jigsaw_spark.operators.text import tokens_expr
     from jigsaw_spark.session import widen
 
@@ -2413,18 +2372,8 @@ def p_curated_budget_mix(
     ntok = docs.select(
         "doc_id", "source", F.size(tokens_expr("text")).alias("ntok")
     )
-    # one exact-dedup pass shared by the flags and the pair graph
-    ded, kpairs = keeper_frames(docs, "doc_id")
-    exact = ded.select("doc_id", "is_dup")
-    comp = connected_components(
-        kpairs.localCheckpoint()
-    ).select("doc_id", F.col("component").alias("c0"))
-    keep = exact.join(comp, "doc_id", "left").select(
-        "doc_id",
-        (
-            ~F.col("is_dup")
-            & (F.coalesce("c0", F.col("doc_id")) == F.col("doc_id"))
-        ).alias("is_keeper"),
+    keep = near_dup_keepers(docs, "doc_id").select(
+        "doc_id", (F.col("keeper") == F.col("doc_id")).alias("is_keeper")
     )
     gate = _gate_ok_col(docs)
     src = (

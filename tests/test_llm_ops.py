@@ -682,6 +682,23 @@ def test_ivfpq_matches_numpy_reference(spark):
         assert cells[r.vec_id] in probed
 
 
+_TOKENLESS_ROWS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "The quick  brown fox jumps over the lazy dog!"),  # exact dup
+    (3, "!!! ..."),  # punctuation-only → zero tokens
+    (4, "???"),  # distinct punctuation-only → zero tokens
+    (5, ""),  # blank → zero tokens
+]
+
+_NULL_TEXT_ROWS = [
+    (1, None),
+    (2, None),
+    (3, ""),
+    (4, "the quick brown fox jumps over the lazy dog"),
+    (5, "the quick brown fox jumps over the lazy dog"),
+]
+
+
 def test_near_dup_keepers_token_empty_docs_stay_singletons(spark):
     """Two DISTINCT punctuation-only docs share fingerprint md5('') but
     carry no tokens: the signature relation (and the certified SQL
@@ -690,14 +707,7 @@ def test_near_dup_keepers_token_empty_docs_stay_singletons(spark):
     medium)."""
     from jigsaw_spark.operators.dedup import near_dup_keepers
 
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "The quick  brown fox jumps over the lazy dog!"),  # exact dup
-        (3, "!!! ..."),  # punctuation-only → zero tokens
-        (4, "???"),  # distinct punctuation-only → zero tokens
-        (5, ""),  # blank → zero tokens
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
+    df = spark.createDataFrame(_TOKENLESS_ROWS, "doc_id int, text string")
     got = {
         r.doc_id: r.keeper
         for r in near_dup_keepers(df, "doc_id").collect()
@@ -712,16 +722,41 @@ def test_near_dup_keepers_null_text_docs_stay_singletons(spark):
     share one keeper (FIXTURES.md §9)."""
     from jigsaw_spark.operators.dedup import near_dup_keepers
 
-    rows = [
-        (1, None),
-        (2, None),
-        (3, ""),
-        (4, "the quick brown fox jumps over the lazy dog"),
-        (5, "the quick brown fox jumps over the lazy dog"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
+    df = spark.createDataFrame(_NULL_TEXT_ROWS, "doc_id int, text string")
     got = {
         r.doc_id: r.keeper
         for r in near_dup_keepers(df, "doc_id").collect()
     }
     assert got == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4}
+
+
+@pytest.mark.parametrize(
+    "rows", [_TOKENLESS_ROWS, _NULL_TEXT_ROWS], ids=["tokenless", "null_text"]
+)
+def test_keeper_cluster_cte_matches_near_dup_keepers(spark, rows):
+    """The oracles' per-doc cluster label (``_keeper_cluster_cte``) gives
+    the same doc → cluster map as near_dup_keepers, token-less docs
+    included (FIXTURES.md §9)."""
+    import duckdb
+
+    from jigsaw_spark.operators.dedup import near_dup_keepers
+    from jigsaw_spark.plans.dedup import (
+        _KEEPER_COMPONENTS_CTE,
+        _keeper_cluster_cte,
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    got = dict(
+        con.execute(
+            f"WITH RECURSIVE {_KEEPER_COMPONENTS_CTE}, "
+            f"{_keeper_cluster_cte()} SELECT doc_id, cluster FROM clust"
+        ).fetchall()
+    )
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    want = {
+        r.doc_id: r.keeper
+        for r in near_dup_keepers(df, "doc_id").collect()
+    }
+    assert got == want

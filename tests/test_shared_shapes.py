@@ -26,6 +26,25 @@ SHAPES = {
     "min(md5(CAST(seed AS VARCHAR) || '|' || shingle))": [("dedup.py", "_minhash_cte")],
     "JOIN ph_bytes y ON x.byte_idx = y.byte_idx": [("mm.py", "_dhash_ham_cte")],
     '.format("memory")': [("stream.py", "_drain")],
+    # the per-doc near-dup cluster label: exact keeper → its component
+    "coalesce(c.component, k.keeper)": [
+        ("dedup.py", "_keeper_cluster_cte"),
+        # folds image edges onto exact keepers, so token-less docs share
+        # one keeper there and the text arm must match the pooled arm
+        ("dq.py", "_pooled_leakage_sql"),
+        ("dq.py", "_pooled_leakage_sql"),
+    ],
+    # the all-docs label over a ``keeper``-labelled comp; it is written
+    # as ``_keeper_cluster_cte(label="keeper")``
+    "coalesce(c.keeper, d.doc_id)": [],
+}
+
+# Plan functions that fold components over exact keepers or pair arms, not
+# a per-doc cluster label (that is operators/dedup.near_dup_keepers).
+KEEPER_COMPONENT_FOLDS = {
+    "dq_pooled_cluster_leakage",
+    "dedup_pooled_text_detectors",
+    "curation_cluster_extinction",
 }
 
 
@@ -59,3 +78,23 @@ def _owners(marker: str) -> list[tuple[str, str | None]]:
 @pytest.mark.parametrize("marker", sorted(SHAPES))
 def test_recurring_shape_has_one_definition(marker):
     assert _owners(marker) == SHAPES[marker]
+
+
+def _called_names(fn: ast.AST) -> set[str]:
+    names = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Call):
+            f = node.func
+            names.add(f.id if isinstance(f, ast.Name) else getattr(f, "attr", ""))
+    return names
+
+
+def test_cluster_labels_come_from_near_dup_keepers():
+    both = {
+        top.name
+        for path in sorted(PLANS.glob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        if isinstance(top, ast.FunctionDef)
+        and {"keeper_frames", "connected_components"} <= _called_names(top)
+    }
+    assert both == KEEPER_COMPONENT_FOLDS

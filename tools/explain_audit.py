@@ -33,7 +33,6 @@ from jigsaw_spark.plans.queries import QUERIES
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-# queries where a cross/nested-loop join is the intended physical shape
 # queries whose nested-loop joins are intentional: broadcast all-pairs
 # against a tiny side (query set / band dim / IVF codebook / 1-row scalar)
 ALL_PAIRS_OK = {
@@ -524,11 +523,6 @@ GLOBAL_WINDOW_OK = {
     # the band windows run over the 16-row replicate dim
     "ml_bootstrap_f1",
 }
-# No exemptions: every registered query is audited (verdict r12 #2 —
-# the two AvailableNow drains formerly here return their drained
-# batch frames, which .explain like any other relation; the audit
-# covers the drain read-back plan, the same surface the driver hashes).
-SKIP: set[str] = set()
 
 
 def _top_level_groups(s: str) -> list[str]:
@@ -639,21 +633,22 @@ final double column and every float-fed comparison:
 3. **Round-normalized finals** — `round(x, N)` once on both sides where
    x is derived from exact inputs through identical operation order
    (IEEE +,-,*,/ are exactly rounded, so both engines produce the same
-   double before the round). This covers the remaining ~180 oracles.
+   double before the round). This covers the remaining oracles.
 
 Verification: `tools/verify_oracle.py` (strict driver-canon replica —
-full-repr floats, hard-fail on array/map output cells) passes 196/196
-oracle-backed queries; `--vanilla --stability` (unconfigured session +
-re-run under shuffle.partitions=7) passes on the full r3 certification
-window — order-dependent float paths would flip the full-precision hash
-there. Array-typed output columns are banned outright (driver ERR
+full-repr floats, hard-fail on array/map output cells) passes 508/508
+registered queries (502 against their DuckDB oracle, 6 rows-only), in
+the tuned session and with `--vanilla` (an unconfigured session, as the
+driver builds);
+`--stability` re-runs each query under shuffle.partitions=7, where an
+order-dependent float path would flip the full-precision hash. Array-typed output columns are banned outright (driver ERR
 class): vectors are emitted as CSV strings (`ann_sq8`,
 `ml_hash_features`, `fn_arrays`) or exploded to long form.
 """
 
 
 def main() -> int:
-    names = sys.argv[1:] or [n for n in QUERIES if n not in SKIP]
+    names = sys.argv[1:] or list(QUERIES)
     spark = get_spark("plan-audit", cpus=8)
     report: list[str] = ["# PLANS — physical-plan audit\n"]
     report.append(
