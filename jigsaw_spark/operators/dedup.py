@@ -74,16 +74,34 @@ def keeper_pairs(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Near-dup pairs (doc_a < doc_b) over EXACT-DEDUP KEEPERS — the
     C4-ordered keeper-graph convention every graph query shares (exact
     dedup first so byte-identical copies never inflate the pair space,
-    then SimHash banding at Hamming <= 2). Single definition (advisor
-    r9 #1) for the graph family; the DuckDB twin is
-    ``_KEEPER_EDGES_CTE`` in plans/dedup.py."""
-    frame = _keeper_sig_frame(df, key)
+    then SimHash banding at Hamming <= 2). The one Spark definition of
+    the keeper graph; its symmetric edge list is
+    ``symmetric_edges(keeper_pairs(df))`` and the DuckDB twin is
+    ``_KEEPER_EDGES_CTE`` in plans/dedup.py.
+
+    The pairs come back behind ONE lazy ``localCheckpoint``: the first
+    action that reads them stores them as part of its own job, and every
+    later consumer (degree aggs, both edge orientations, frontier joins,
+    components rounds) reads the stored pairs instead of re-deriving
+    the dedup lineage. Callers add no checkpoint of their own. An eager
+    checkpoint here would be a separately scheduled job; it added one
+    to graph_random_walk and graph_node2vec_walk (SCALE.md §7.1)."""
+    pairs = _pairs_of_keepers(_keeper_sig_frame(df, key), key)
+    return pairs.localCheckpoint(eager=False)
+
+
+def _pairs_of_keepers(
+    frame: DataFrame, key: str, max_hamming: int = 2
+) -> DataFrame:
+    """(doc_a, doc_b) SimHash pairs among the exact-dedup keepers of a
+    :func:`_keeper_sig_frame`; token-less keepers (NULL signature) get
+    no pair."""
     return _pairs_from_sigs(
         frame.filter(
             ~F.col("is_dup") & F.col("simhash").isNotNull()
         ).select(key, "simhash"),
         key,
-        max_hamming=2,
+        max_hamming,
     ).select("doc_a", "doc_b")
 
 
@@ -179,15 +197,7 @@ def keeper_frames(
     that reads keeper text semi-joins the keeper ids back to the
     corpus."""
     frame = _keeper_sig_frame(df, key).localCheckpoint()
-    ded = frame.select(key, "keeper", "is_dup")
-    pairs = _pairs_from_sigs(
-        frame.filter(
-            ~F.col("is_dup") & F.col("simhash").isNotNull()
-        ).select(key, "simhash"),
-        key,
-        max_hamming=2,
-    ).select("doc_a", "doc_b")
-    return ded, pairs
+    return frame.select(key, "keeper", "is_dup"), _pairs_of_keepers(frame, key)
 
 
 def symmetric_edges(pairs: DataFrame) -> DataFrame:
@@ -198,14 +208,6 @@ def symmetric_edges(pairs: DataFrame) -> DataFrame:
     ).union(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
-
-
-def keeper_edges(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """``symmetric_edges(keeper_pairs(df))``, localCheckpoint'ed ONCE so
-    downstream multi-join consumers (degree aggs, frontier expansions)
-    stop re-deriving the dedup lineage (the graph_random_walk lesson,
-    r9)."""
-    return symmetric_edges(keeper_pairs(df, key)).localCheckpoint()
 
 
 def doc_shingles(df: DataFrame, key: str, text: str = "text", n: int = 3) -> DataFrame:
@@ -657,8 +659,8 @@ def _pairs_from_sigs(
 ) -> DataFrame:
     """Banding + bucket join + Hamming verify over an existing (key,
     simhash) relation — the JVM-only tail of :func:`simhash_pairs`,
-    shared by :func:`keeper_frames` so a checkpointed signature frame
-    can re-derive pairs without re-running the Python kernel."""
+    shared by :func:`_pairs_of_keepers` so a checkpointed signature
+    frame can re-derive pairs without re-running the Python kernel."""
     n_bands = max_hamming + 1
     width = num_bits // n_bands
     band_structs = F.array(
@@ -1334,13 +1336,7 @@ def near_dup_keepers(
         .otherwise(F.col("keeper"))
         .alias("_ek"),
     )
-    pairs = _pairs_from_sigs(
-        frame.filter(
-            ~F.col("is_dup") & F.col("simhash").isNotNull()
-        ).select(key, "simhash"),
-        key,
-        max_hamming,
-    ).select("doc_a", "doc_b")
+    pairs = _pairs_of_keepers(frame, key, max_hamming)
     comp = connected_components(pairs).select(
         F.col("doc_id").alias("_ek"), F.col("component")
     )

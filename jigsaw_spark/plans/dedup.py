@@ -249,8 +249,8 @@ def _simhash_edges_cte(
     {_sym_edges_cte(edges, pairs, edges_materialized)}"""
 
 
-# DuckDB twin of operators/dedup.keeper_edges (advisor r9 #1): the
-# keeper-graph pair list + symmetric edge list shared by the
+# DuckDB twin of operators/dedup.keeper_pairs and its symmetric_edges:
+# the keeper-graph pair list + symmetric edge list shared by the
 # graph family (and dq, ann, p, curation). Single definition so the keeper
 # convention (exact dedup -> SimHash Hamming <= 2) cannot drift.
 _KEEPER_EDGES_CTE = f"""{_SIMHASH_KEEPER_CTE},
@@ -1500,11 +1500,11 @@ def _edge_source_mix_sql() -> str:
     "projection, one |sources| hash-agg",
 )
 def dedup_edge_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
     lab = docs.select("doc_id", "source")
-    edges = keeper_edges(docs, "doc_id").localCheckpoint()
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     el = (
         edges.join(
             lab.select(
@@ -1602,7 +1602,7 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.dedup import keeper_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    tp = keeper_pairs(docs, "doc_id").localCheckpoint()
+    tp = keeper_pairs(docs, "doc_id")
     tdocs = (
         tp.select(F.col("doc_a").alias("doc_id"))
         .union(tp.select(F.col("doc_b").alias("doc_id")))
@@ -1713,7 +1713,7 @@ def dedup_pooled_components(
     )
 
     docs = _t(spark, sf_dir, "documents")
-    tpairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    tpairs = keeper_pairs(docs, "doc_id")
     ipairs = (
         mm_phash_near_dup(spark, sf_dir)
         .select(

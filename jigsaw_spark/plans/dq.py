@@ -2076,12 +2076,12 @@ def _dedup_bias_sql() -> str:
 
     return f"""
     WITH RECURSIVE {_KEEPER_COMPONENTS_CTE},
+    {_keeper_cluster_cte()},
     labeled AS (
-      SELECT d.doc_id, d.n_chars, d.text,
-             coalesce(c.component, d.doc_id) AS component
-      FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+      SELECT d.doc_id, d.n_chars, d.text, c.cluster
+      FROM documents d JOIN clust c ON d.doc_id = c.doc_id),
     flags AS (
-      SELECT doc_id <> component AS is_dropped, n_chars,
+      SELECT doc_id <> cluster AS is_dropped, n_chars,
              (len({tokens_sql('text')}) >= 20
               AND {alnum_ratio_sql('text')} >= 0.5 AND
               {lang_predict_sql(
@@ -2108,22 +2108,19 @@ def _dedup_bias_sql() -> str:
     "dq_dedup_bias",
     _dedup_bias_sql(),
     "does min-id keeper selection throw away quality: every doc "
-    "labeled by its near-dup component (keeper graph -> min reachable "
-    "id; singletons keep themselves), then survivors vs dropped "
-    "compared on the v1 gate pass rate and mean length. Exact dedup "
-    "drops BYTE-IDENTICAL copies (no bias possible); NEAR-dup keepers "
-    "are chosen by id, so a systematic pass-rate gap between kept and "
-    "dropped is dedup-induced selection bias — the measurement that "
-    "justifies dedup_exact_keep_best's keep-the-best policy at the "
-    "near-dup tier. Shape: the shared keeper graph -> the production "
-    "components shape -> one map-side gate projection -> a 2-row "
-    "rollup",
+    "labeled by its near-dup cluster (near_dup_keepers: its exact "
+    "keeper's keeper-graph component, min reachable id; singletons "
+    "keep themselves) and dropped unless it is that min id — exact "
+    "copies included — then survivors vs dropped compared on the v1 "
+    "gate pass rate and mean length. NEAR-dup keepers are chosen by "
+    "id, so a systematic pass-rate gap between kept and dropped is "
+    "dedup-induced selection bias — the measurement that justifies "
+    "dedup_exact_keep_best's keep-the-best policy at the near-dup "
+    "tier. Shape: the shared cluster label -> one doc-id join -> one "
+    "map-side gate projection -> a 2-row rollup",
 )
 def dq_dedup_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import (
-        connected_components,
-        keeper_pairs,
-    )
+    from jigsaw_spark.operators.dedup import near_dup_keepers
     from jigsaw_spark.operators.text import (
         alnum_ratio_expr,
         lang_hits_expr,
@@ -2132,15 +2129,10 @@ def dq_dedup_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = keeper_pairs(docs, "doc_id").localCheckpoint()
-    comp = connected_components(pairs)
-    labeled = docs.join(comp, "doc_id", "left").select(
+    labeled = docs.join(near_dup_keepers(docs, "doc_id"), "doc_id").select(
         "n_chars",
         "text",
-        (
-            F.col("doc_id")
-            != F.coalesce("component", F.col("doc_id"))
-        ).alias("is_dropped"),
+        (F.col("doc_id") != F.col("keeper")).alias("is_dropped"),
     )
     t = tokens_expr("text")
     flags = labeled.select(
@@ -2159,7 +2151,7 @@ def dq_dedup_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("passes"),
     )
-    tot = flags.agg(F.count(F.lit(1)).cast("bigint").alias("n_all"))
+    # n_all sums the 2-row rollup, so the labelled corpus is read once
     return (
         flags.groupBy("is_dropped")
         .agg(
@@ -2169,7 +2161,7 @@ def dq_dedup_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_pass"),
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
         )
-        .crossJoin(F.broadcast(tot))
+        .withColumn("n_all", F.sum("n_docs").over(Window.partitionBy()))
         .select(
             "is_dropped",
             "n_docs",

@@ -1,9 +1,12 @@
 """Graph queries (``graph_*``) over the near-dup keeper graph: centrality,
 walks, communities, assortativity, components.
 
-The keeper edge list is localCheckpoint'ed once and reused by degree,
-two-hop and anti-join steps; frontier joins are bounded by near-dup density,
-not corpus size. ``graph_degree_assortativity`` is the exact-integer twin of
+The keeper graph is ``operators/dedup.keeper_pairs``, whose pair list is
+materialized once (a lazy localCheckpoint, filled by the first action) and
+reused by degree, two-hop, anti-join and components steps; its edge list is
+``symmetric_edges`` over those pairs, and no query checkpoints either of
+them again. Frontier joins are bounded by near-dup density, not corpus size.
+``graph_degree_assortativity`` is the exact-integer twin of
 ``graph_assortativity``: the symmetric-marginal identity removes the sqrt.
 """
 
@@ -737,31 +740,19 @@ def _modularity_sql() -> str:
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.dedup import (
         connected_components,
-        exact_dedup,
-        simhash_pairs,
+        keeper_pairs,
+        symmetric_edges,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    keepers = (
-        exact_dedup(docs, "doc_id")
-        .filter(~F.col("is_dup"))
-        .select("doc_id", "text")
-    )
-    # the pair relation feeds comp, both edge directions, mm and intra —
-    # uncheckpointed, the exact-dedup + simhash kernel lineage evaluated
-    # 6x (the _before plan shows 14 Python kernel nodes); materialize the
-    # candidate pairs once, and comp once (it feeds intra AND degs)
-    pairs = (
-        simhash_pairs(keepers, "doc_id", max_hamming=2)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
+    # the pairs feed comp, both edge directions, mm and intra (keeper_pairs
+    # materializes them once); comp is materialized once too, as it feeds
+    # intra AND degs
+    pairs = keeper_pairs(docs, "doc_id")
     comp = connected_components(pairs).select(
         F.col("doc_id"), F.col("component")
     ).localCheckpoint()
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    )
+    edges = symmetric_edges(pairs)
     mm = pairs.agg(F.count(F.lit(1)).alias("m"))
     intra = (
         pairs.join(
@@ -1088,24 +1079,12 @@ def _walk_sql() -> str:
     "over identical adjacency lists",
 )
 def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import exact_dedup, simhash_pairs
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    keepers = (
-        exact_dedup(docs, "doc_id")
-        .filter(~F.col("is_dup"))
-        .select("doc_id", "text")
-    )
-    pairs = simhash_pairs(keepers, "doc_id", max_hamming=2).select(
-        "doc_a", "doc_b"
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-    # localCheckpoint: the 4 step-joins below would otherwise re-derive
-    # the whole exact-dedup -> simhash-pairs -> groupBy lineage once per
-    # step (10 scans / 35 shuffles in the plan audit for what is
-    # logically 2 scans + 5 shuffles) — the graph_kcore r5 lesson.
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
+    # localCheckpoint: the 4 step-joins below would otherwise re-run the
+    # adjacency groupBy once per step — the graph_kcore r5 lesson.
     adj = edges.groupBy("u").agg(
         F.sort_array(F.collect_set("v")).alias("nbrs")
     ).localCheckpoint()
@@ -1188,33 +1167,17 @@ def _adamic_adar_sql() -> str:
     ">= 2 by construction, so ln is never zero. EXACT: per-neighbor "
     "weights pre-rounded to integer nano-units (identical integer ln "
     "args on both engines), summed as integers. Shape: the edge list "
-    "is derived once and localCheckpoint'ed (degree, both two-hop "
-    "sides, and the adjacency anti-join all reuse it — the "
-    "graph_random_walk lesson); the two-hop join is frontier-sized on "
+    "reads keeper_pairs' one materialized pair list (degree, both "
+    "two-hop sides, and the adjacency anti-join all reuse it); the "
+    "two-hop join is frontier-sized on "
     "the keeper graph, bounded by near-dup density, never corpus "
     "all-pairs",
 )
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import exact_dedup, simhash_pairs
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    keepers = (
-        exact_dedup(docs, "doc_id")
-        .filter(~F.col("is_dup"))
-        .select("doc_id", "text")
-    )
-    pairs = simhash_pairs(keepers, "doc_id", max_hamming=2).select(
-        "doc_a", "doc_b"
-    )
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("u"), F.col("doc_a").alias("v")
-            )
-        )
-        .localCheckpoint()
-    )
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     # deg-1 nodes can never be a common neighbor of a distinct pair;
     # filter BEFORE the division so ln(1) = 0 never reaches it (ANSI
     # mode evaluates eagerly even for rows a later join would drop)
@@ -1320,22 +1283,10 @@ def _node2vec_sql() -> str:
     "— no explode, no window, frontier-sized shuffles only",
 )
 def graph_node2vec_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import exact_dedup, simhash_pairs
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    keepers = (
-        exact_dedup(docs, "doc_id")
-        .filter(~F.col("is_dup"))
-        .select("doc_id", "text")
-    )
-    pairs = simhash_pairs(keepers, "doc_id", max_hamming=2).select(
-        "doc_a", "doc_b"
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).union(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    )
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     adj = (
         edges.groupBy("u")
         .agg(F.sort_array(F.collect_set("v")).alias("nbrs"))
@@ -1517,16 +1468,16 @@ def _assortativity_sql() -> str:
     "marginals coincide, so r = (m*Sxy - Sx^2)/(m*Sxx - Sx^2) is a "
     "ratio of integers and NO sqrt ever appears (degenerate regular "
     "graph: den = 0 reports 0). Both engines truncate the signed "
-    "division toward zero. Shape: the keeper edge list is derived "
-    "once and localCheckpoint'ed (degree agg, both endpoint joins, "
-    "and the global sum all reuse it); the degree join is keyed on "
+    "division toward zero. Shape: the keeper edge list reads "
+    "keeper_pairs' one materialized pair list (degree agg, both "
+    "endpoint joins, and the global sum all reuse it); the degree join is keyed on "
     "node id; output is one row",
 )
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    edges = keeper_edges(docs, "doc_id")
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     deg = edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -1615,16 +1566,16 @@ def _rich_club_sql() -> str:
     "mixing summary. EXACT: over the symmetric edge list phi = "
     "E_directed(k) / (N_k*(N_k-1)) is a ratio of integers (k levels "
     "with N_k <= 1 report 0; an empty rich club still emits its row "
-    "via the k-dim left join). Shape: the keeper edge list is derived "
-    "once and localCheckpoint'ed, one degree agg, one two-sided "
+    "via the k-dim left join). Shape: the keeper edge list over "
+    "keeper_pairs' one materialized pair list, one degree agg, one two-sided "
     "degree join, then a broadcast x3 k-dim explode and a 3-row "
     "rollup",
 )
 def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    edges = keeper_edges(docs, "doc_id")
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     deg = edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -1725,20 +1676,24 @@ def _harmonic_sql() -> str:
     "cluster-level dedup, where graph_pagerank_exact surfaces "
     "endorsement weight instead. EXACT: distances in {1,2,3} put 1/d "
     "over the common denominator 6, so h6 = 6*n1 + 3*n2 + 2*n3 is an "
-    "integer (ties: doc_id). Shape: the keeper edge list is "
-    "localCheckpoint'ed once; hop counts come from the size-adaptive "
+    "integer (ties: doc_id). Shape: the keeper edge list reads "
+    "keeper_pairs' one materialized pair list; hop counts come from the size-adaptive "
     "hop_counts operator (single-task BFS kernel below the components "
     "edge threshold, anti-join frontier chain above it — bounded by "
     "near-dup density, never corpus all-pairs); the top-10 window "
     "runs over the node dim",
 )
 def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import hop_counts, keeper_edges
+    from jigsaw_spark.operators.dedup import (
+        hop_counts,
+        keeper_pairs,
+        symmetric_edges,
+    )
 
     docs = _t(spark, sf_dir, "documents")
-    edges = keeper_edges(docs, "doc_id")
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     # n_k = nodes at hop distance exactly k; the edge list is distinct
-    # (simhash_pairs dedups), so the old per-u edge-row counts equal the
+    # (keeper_pairs is distinct), so the old per-u edge-row counts equal the
     # operator's distinct-neighbor counts. Size-adaptive: single-task BFS
     # below the components threshold, frontier-join chain above it.
     counts = hop_counts(edges, max_hops=3)
@@ -1851,7 +1806,7 @@ def graph_hub_removal_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    pairs = keeper_pairs(docs, "doc_id")
     edges = symmetric_edges(pairs)
     deg = edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2001,13 +1956,13 @@ def _lpa_sql() -> str:
     "local rounds already recover. Shape: two rounds of (edge join "
     "label) hash-aggs; the top-1 vote window is per node over its "
     "(node, label) vote rows — edge-count-bounded; the keeper edge "
-    "list is the shared localCheckpoint'ed one",
+    "list reads keeper_pairs' one materialized pair list",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    edges = keeper_edges(docs, "doc_id")
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     l2 = lpa_two_rounds(edges)
     comm = l2.groupBy("lbl").agg(
         F.count(F.lit(1)).cast("bigint").alias("size")
@@ -2088,10 +2043,10 @@ def _conductance_sql() -> str:
 def graph_community_conductance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    edges = keeper_edges(docs, "doc_id")
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     l2 = lpa_two_rounds(edges).localCheckpoint()
     deg = edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2195,14 +2150,15 @@ def _transitivity_sql() -> str:
     "cluster-shape diagnostic behind the hub-removal intervention. "
     "EXACT: integer triangle/wedge counts (each triangle closes 3 "
     "adjacent pairs, hence div 3), one floor division. Shape: the "
-    "shared localCheckpoint'ed keeper edge list; one degree hash-agg, "
+    "keeper edge list over keeper_pairs' one materialized pair list; "
+    "one degree hash-agg, "
     "one pair-closure join (keeper-graph-sized), 1-row output",
 )
 def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    pairs = keeper_pairs(docs, "doc_id")
     edges = symmetric_edges(pairs)
     deg = edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2289,10 +2245,10 @@ def _degree_gini_sql() -> str:
     "histogram -> bounded-dim prefix window -> 1-row report",
 )
 def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    edges = keeper_edges(docs, "doc_id").localCheckpoint()
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     deg = edges.groupBy("u").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -2390,11 +2346,11 @@ def _lang_assort_sql() -> str:
 def graph_lang_assortativity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from jigsaw_spark.operators.dedup import keeper_edges
+    from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
     lab = docs.select("doc_id", "lang")
-    edges = keeper_edges(docs, "doc_id").localCheckpoint()
+    edges = symmetric_edges(keeper_pairs(docs, "doc_id"))
     el = (
         edges.join(
             lab.select(
@@ -2489,7 +2445,7 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    pairs = keeper_pairs(docs, "doc_id")
     edges = symmetric_edges(pairs)
     e1 = edges.select(F.col("u").alias("a1"), F.col("v").alias("c1"))
     e2 = edges.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
@@ -2582,7 +2538,7 @@ def graph_bridge_fragmentation(
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    pairs = keeper_pairs(docs, "doc_id")
     edges = symmetric_edges(pairs)
     e1 = edges.select(F.col("u").alias("a1"), F.col("v").alias("c1"))
     e2 = edges.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
@@ -2675,7 +2631,7 @@ def graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.dedup import keeper_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    pairs = keeper_pairs(docs, "doc_id")
     edges = symmetric_edges(pairs)
     e1 = edges.select(F.col("u").alias("a1"), F.col("v").alias("c1"))
     e2 = edges.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
@@ -2789,7 +2745,7 @@ def graph_component_depth(
     from jigsaw_spark.operators.dedup import component_depths, keeper_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    tpairs = keeper_pairs(docs, "doc_id").localCheckpoint()
+    tpairs = keeper_pairs(docs, "doc_id")
     ipairs = (
         mm_phash_near_dup(spark, sf_dir)
         .select(

@@ -130,10 +130,11 @@ def test_simhash_pairs_hamming(docs):
     assert pairs.get((1, 3)) == 0
 
 
-def test_keeper_frames_matches_separate_derivations(docs):
+def test_keeper_frames_matches_separate_derivations(docs, tables):
     """keeper_frames must be a pure fusion: ded carries exact_dedup's
     flags unchanged and pairs is exactly keeper_pairs(df) — the r13
-    one-window optimization cannot drift either output."""
+    one-window optimization cannot drift either output. keeper_pairs in
+    turn equals the hand form, simhash_pairs over exact_dedup keepers."""
     from jigsaw_spark.operators.dedup import keeper_frames, keeper_pairs
 
     ded, kpairs = keeper_frames(docs, "doc_id")
@@ -154,6 +155,26 @@ def test_keeper_frames_matches_separate_derivations(docs):
     }
     got_pairs = {(r.doc_a, r.doc_b) for r in kpairs.collect()}
     assert got_pairs == want_pairs
+    # on the fixture and on the smoke corpus, whose keeper graph has edges
+    for frame in (docs, tables["documents"]):
+        keepers = exact_dedup(frame, "doc_id").filter(~F.col("is_dup"))
+        hand = {
+            (r.doc_a, r.doc_b)
+            for r in simhash_pairs(keepers, "doc_id", max_hamming=2).collect()
+        }
+        assert hand == {
+            (r.doc_a, r.doc_b) for r in keeper_pairs(frame, "doc_id").collect()
+        }
+    assert hand
+
+
+def test_keeper_pairs_is_materialized_once(docs):
+    """keeper_pairs returns its pairs behind its own (lazy) checkpoint, so
+    consumers read stored pairs and add no checkpoint of their own."""
+    from jigsaw_spark.operators.dedup import keeper_pairs
+
+    plan = keeper_pairs(docs, "doc_id")._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LogicalRDD"
 
 
 def test_signature_kernels_batch_position_invariant(spark):
@@ -728,6 +749,40 @@ def test_near_dup_keepers_null_text_docs_stay_singletons(spark):
         for r in near_dup_keepers(df, "doc_id").collect()
     }
     assert got == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4}
+
+
+@pytest.mark.parametrize(
+    "rows, dup", [(_TOKENLESS_ROWS, 2), (_NULL_TEXT_ROWS, 5)],
+    ids=["tokenless", "null_text"],
+)
+def test_dedup_bias_drops_exact_copies(spark, tmp_path, rows, dup):
+    """dq_dedup_bias labels docs by the near-dup cluster label, so an exact
+    copy that is not its fingerprint's keeper counts as dropped, and its
+    oracle agrees (FIXTURES.md §9 fixtures)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jigsaw_spark.plans.queries import QUERIES
+
+    path = tmp_path / "documents.parquet"
+    ids = pa.array([d for d, _ in rows], pa.int64())
+    # n_chars carries the doc id, so a 1-doc row's mean_chars names its doc
+    pq.write_table(
+        pa.table({
+            "doc_id": ids,
+            "text": pa.array([t for _, t in rows], pa.string()),
+            "n_chars": ids,
+        }),
+        path,
+    )
+    spec = QUERIES["dq_dedup_bias"]
+    got = sorted(tuple(r) for r in spec.spark(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    assert got == sorted(con.execute(spec.oracle).fetchall())
+    # (is_dropped, n_docs, ..., mean_chars)
+    assert [(r[0], r[1], r[-1]) for r in got if r[0]] == [(True, 1, dup)]
 
 
 @pytest.mark.parametrize(

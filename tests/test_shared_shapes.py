@@ -37,6 +37,9 @@ SHAPES = {
     # the all-docs label over a ``keeper``-labelled comp; it is written
     # as ``_keeper_cluster_cte(label="keeper")``
     "coalesce(c.keeper, d.doc_id)": [],
+    # the reversed orientation of a Spark pair list's symmetric edge list;
+    # it is operators/dedup.symmetric_edges
+    'F.col("doc_b").alias("u")': [],
 }
 
 # Plan functions that fold components over exact keepers or pair arms, not
@@ -80,21 +83,48 @@ def test_recurring_shape_has_one_definition(marker):
     assert _owners(marker) == SHAPES[marker]
 
 
+def _callee(call: ast.Call) -> str:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+
+
 def _called_names(fn: ast.AST) -> set[str]:
-    names = set()
-    for node in ast.walk(fn):
-        if isinstance(node, ast.Call):
-            f = node.func
-            names.add(f.id if isinstance(f, ast.Name) else getattr(f, "attr", ""))
-    return names
+    return {_callee(n) for n in ast.walk(fn) if isinstance(n, ast.Call)}
+
+
+def _plan_functions():
+    for path in sorted(PLANS.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, ast.FunctionDef):
+                yield top
 
 
 def test_cluster_labels_come_from_near_dup_keepers():
     both = {
         top.name
-        for path in sorted(PLANS.glob("*.py"))
-        for top in ast.parse(path.read_text()).body
-        if isinstance(top, ast.FunctionDef)
-        and {"keeper_frames", "connected_components"} <= _called_names(top)
+        for top in _plan_functions()
+        if {"keeper_frames", "connected_components"} <= _called_names(top)
     }
     assert both == KEEPER_COMPONENT_FOLDS
+
+
+def test_keeper_graph_comes_from_keeper_pairs():
+    """The Spark keeper graph is operators/dedup.keeper_pairs, which
+    materializes its pairs itself: no plan function rebuilds it from
+    exact_dedup and simhash_pairs, and none checkpoints it again."""
+    hand = [
+        top.name
+        for top in _plan_functions()
+        if {"exact_dedup", "simhash_pairs"} <= _called_names(top)
+    ]
+    rechecked = [
+        top.name
+        for top in _plan_functions()
+        for n in ast.walk(top)
+        if isinstance(n, ast.Call)
+        and _callee(n) == "localCheckpoint"
+        and isinstance(n.func, ast.Attribute)
+        and isinstance(n.func.value, ast.Call)
+        and _callee(n.func.value) == "keeper_pairs"
+    ]
+    assert hand == [] and rechecked == []

@@ -10,11 +10,15 @@ that side's module set is swapped into sys.modules and registered with
 cloudpickle to pickle by value, so function-local imports and Python
 workers run that side's code. Per-process caches such as the table-schema
 cache persist from rep to rep: a side's first rep is cold, and its later
-reps do not depend on which queries ran before them. Each rep is one
-bench.time_query. Its counters are the jobs and completed stages with ids
-above the high-water mark taken before it, read from the status store with
-the UI off; streaming micro-batches outside the caller's job group count
-too. A counter that differs between reps prints as a list.
+reps do not depend on which queries ran before them. The sides swap
+order every rep (old first on even reps, new first on odd ones), so
+neither side always runs second on the OS and JVM caches the other
+warmed; an even -n gives each side the first slot equally often. Each
+rep is one bench.time_query. Its counters are the jobs and completed
+stages with ids above the high-water mark taken before it, read from the
+status store with the UI off; streaming micro-batches outside the
+caller's job group count too. A counter that differs between reps prints
+as a list.
 
 Usage:
     python tools/ab_interleave.py [-n 4] [--ref HEAD] [--sf DIR] \
@@ -143,7 +147,8 @@ def main() -> None:
     counts = {n: {"old": [], "new": []} for n in args.names}
     try:
         for rep in range(args.n):
-            for side in sides:
+            order = list(sides) if rep % 2 == 0 else list(sides)[::-1]
+            for side in order:
                 replaced = _swap_in(mods[side])
                 if active is not None:
                     mods[active] = replaced
