@@ -518,6 +518,24 @@ def minhash_lsh_pairs(
     return small.unionByName(chained).distinct()
 
 
+def lsh_pairs(df: DataFrame, key: str = "doc_id") -> DataFrame:
+    """MinHash-LSH candidate pairs (doc_a < doc_b) at the default 16
+    hashes in 4 bands — the one Spark definition of the LSH candidate
+    graph the graph queries share. Its symmetric edge list is
+    ``symmetric_edges(lsh_pairs(df))`` and the DuckDB twin is
+    ``_lsh_pairs_cte`` in plans/dedup.py.
+
+    Like :func:`keeper_pairs`, the pairs come back behind ONE lazy
+    ``localCheckpoint``: the first action stores them as part of its
+    own job and every later consumer reads the stored pairs, so
+    callers add no checkpoint or cache of their own. A query that reads
+    the pairs once calls :func:`minhash_lsh_pairs` instead: the
+    checkpoint's ``LogicalRDD`` hides the bucket partitioning the next
+    join would reuse, and it added jobs and shuffle bytes to
+    dedup_band_sweep and dedup_lsh_recall (SCALE.md §7.1)."""
+    return minhash_lsh_pairs(df, key).localCheckpoint(eager=False)
+
+
 def _md5_val_factory(hex_chars: int):
     """Per-task memoized token → md5-derived uint mapper (guide §4.5:
     md5 is a pure function of the token text, so the memo is transient
@@ -1328,8 +1346,9 @@ def near_dup_keepers(
     # class), and the r14 frame keeps text out of the checkpoint
     # entirely. simhash IS NULL ⟺ token-empty (the kernel computes a
     # signature for every tokenful row), so the empty-doc carve-out
-    # needs no second tokenization.
-    frame = _keeper_sig_frame(df, key, text).localCheckpoint()
+    # needs no second tokenization. The checkpoint is lazy: its first
+    # reader, connected_components' edge count, fills it in its own job.
+    frame = _keeper_sig_frame(df, key, text).localCheckpoint(eager=False)
     ek = frame.select(
         key,
         F.when(F.col("simhash").isNull(), F.col(key))

@@ -77,6 +77,21 @@ def _bands_cte(
       FROM {mh} GROUP BY doc_id, band)"""
 
 
+def _lsh_pairs_cte(
+    name: str = "pairs", bands: str = "bands", materialized: bool = False
+) -> str:
+    """``name(doc_a, doc_b)``: the MinHash-LSH candidate pairs (doc_a <
+    doc_b) of a ``bands(doc_id, band, sig)`` CTE — docs that agree on
+    every row of at least one band. The twin of
+    ``operators/dedup.minhash_lsh_pairs``."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{name} AS{mat} (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM {bands} a
+      JOIN {bands} b ON a.band = b.band AND a.sig = b.sig
+                  AND a.doc_id < b.doc_id)"""
+
+
 # Shared oracle CTE chain for the C4-ordered pair scorers
 # (operators/dedup.banded_pair_scores): exact-dedup keepers → shingles over
 # keepers only → 16 md5-seeded minhashes → 4 bands × 4 rows → LSH candidate
@@ -96,11 +111,7 @@ _BANDED_PAIR_CTES = f"""{_TOKS_CTE},
       FROM keep WHERE len(t) >= 3),
     {_minhash_cte()},
     {_bands_cte(materialized=True)},
-    cand AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.sig = b.sig
-                  AND a.doc_id < b.doc_id),
+    {_lsh_pairs_cte("cand", materialized=True)},
     sizes AS MATERIALIZED (
       SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
     inter AS MATERIALIZED (
@@ -164,16 +175,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH {_TOKS_CTE}, {_SHINGLES_CTE},
     {_minhash_cte()},
-    {_bands_cte()}
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a
-    JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+    {_bands_cte()},
+    {_lsh_pairs_cte()}
+    SELECT doc_a, doc_b FROM pairs
     """,
     "MinHash-LSH candidates: 16 md5-seeded minhashes, 4 bands x 4 rows",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
+    return minhash_lsh_pairs(docs, "doc_id")
 
 
 _SIMHASH_CTE = f"""
@@ -378,7 +388,7 @@ def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text")
         ),
     )
-    return minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4, max_bucket=10)
+    return minhash_lsh_pairs(docs, "doc_id", max_bucket=10)
 
 
 @register(
@@ -387,10 +397,7 @@ def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},
     {_minhash_cte()},
     {_bands_cte()},
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+    {_lsh_pairs_cte()},
     {_sym_edges_cte()},
     {_components_cte()},
     labeled AS (
@@ -412,7 +419,7 @@ def dedup_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jigsaw_spark.operators.dedup import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
+    pairs = minhash_lsh_pairs(docs, "doc_id")
     comp = connected_components(pairs)
     labeled = docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("component", F.col("doc_id")).alias("component")
@@ -713,11 +720,7 @@ def dedup_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE inter / (sa.sz + sb.sz - inter) >= 0.5),
     {_minhash_cte()},
     {_bands_cte()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.sig = b.sig
-                  AND a.doc_id < b.doc_id),
+    {_lsh_pairs_cte("cand")},
     joined AS (
       SELECT coalesce(t.in_t, 0) AS in_t, coalesce(c.in_c, 0) AS in_c
       FROM (SELECT doc_a, doc_b, 1 AS in_t FROM truth) t
@@ -753,7 +756,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ngram_jaccard_pairs(
         docs, "doc_id", threshold=0.5, max_posting=1000
     ).select("doc_a", "doc_b", F.lit(1).alias("in_t"))
-    cand = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4).select(
+    cand = minhash_lsh_pairs(docs, "doc_id").select(
         "doc_a", "doc_b", F.lit(1).alias("in_c")
     )
     joined = truth.join(cand, ["doc_a", "doc_b"], "full").select(
@@ -1336,11 +1339,7 @@ def _band_sweep_sql() -> str:
         thr = round(1000 * (1.0 / b) ** (1.0 / r))
         arms.append(f"""
     {_bands_cte(rows=r, name=f'bands_{b}')},
-    pairs_{b} AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
-      FROM bands_{b} a
-      JOIN bands_{b} b2 ON a.band = b2.band AND a.sig = b2.sig
-                        AND a.doc_id < b2.doc_id),
+    {_lsh_pairs_cte(f'pairs_{b}', f'bands_{b}')},
     row_{b} AS (
       SELECT {b} AS bands, {r} AS rows_per_band,
              CAST({thr} AS BIGINT) AS threshold_milli,
@@ -1383,9 +1382,7 @@ def dedup_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms = []
     for b, r in _BAND_CFGS:
         thr = round(1000 * (1.0 / b) ** (1.0 / r))
-        n = minhash_lsh_pairs(
-            docs, "doc_id", num_hashes=16, bands=b
-        ).agg(
+        n = minhash_lsh_pairs(docs, "doc_id", bands=b).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs")
         )
         arms.append(
@@ -1757,11 +1754,7 @@ def _detector_agreement_sql() -> str:
     {_SHINGLES_CTE},
     {_minhash_cte()},
     {_bands_cte()},
-    mhp AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.sig = b.sig
-                  AND a.doc_id < b.doc_id),
+    {_lsh_pairs_cte("mhp", materialized=True)},
     {_simhash_edges_cte("shp", None, pairs_materialized=True)},
     u AS (
       SELECT coalesce(m.doc_a, s.doc_a) AS doc_a,
@@ -1868,11 +1861,7 @@ def _sig_size_sql() -> str:
         cfg.append(f"""
     {_minhash_cte(seeds=np_, name=f'mh_{np_}', materialized=True)},
     {_bands_cte(name=f'bands_{np_}', mh=f'mh_{np_}')},
-    cand_{np_} AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands_{np_} a
-      JOIN bands_{np_} b ON a.band = b.band AND a.sig = b.sig
-                        AND a.doc_id < b.doc_id),
+    {_lsh_pairs_cte(f'cand_{np_}', f'bands_{np_}', materialized=True)},
     est_{np_} AS (
       SELECT c.doc_a, c.doc_b,
              CAST(sum(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) * 1000
@@ -2105,11 +2094,7 @@ def _pooled_detectors_sql() -> str:
       FROM ktoks WHERE len(t) >= 3),
     {_minhash_cte(src="ksh")},
     {_bands_cte()},
-    mhp AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.sig = b.sig
-                  AND a.doc_id < b.doc_id),
+    {_lsh_pairs_cte("mhp", materialized=True)},
     {_sym_edges_cte("medges", "mhp")},
     uedges AS MATERIALIZED (
       SELECT u, v FROM medges UNION SELECT u, v FROM edges),
@@ -2147,7 +2132,7 @@ def dedup_pooled_text_detectors(
     from jigsaw_spark.operators.dedup import (
         connected_components,
         keeper_frames,
-        minhash_lsh_pairs,
+        lsh_pairs,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -2159,11 +2144,7 @@ def dedup_pooled_text_detectors(
     keepers = docs.select("doc_id", "text").join(
         ded.filter(~F.col("is_dup")), "doc_id", "left_semi"
     )
-    mhp = (
-        minhash_lsh_pairs(keepers, "doc_id")
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
+    mhp = lsh_pairs(keepers, "doc_id")
     # kpairs IS keeper_pairs' C4-ordered SimHash banding over keepers
     shp = kpairs.localCheckpoint()
     upairs = mhp.unionByName(shp).distinct()

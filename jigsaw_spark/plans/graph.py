@@ -1,11 +1,14 @@
-"""Graph queries (``graph_*``) over the near-dup keeper graph: centrality,
-walks, communities, assortativity, components.
+"""Graph queries (``graph_*``) over the near-dup keeper graph and the
+MinHash-LSH candidate graph: centrality, walks, communities, assortativity,
+components.
 
-The keeper graph is ``operators/dedup.keeper_pairs``, whose pair list is
-materialized once (a lazy localCheckpoint, filled by the first action) and
-reused by degree, two-hop, anti-join and components steps; its edge list is
-``symmetric_edges`` over those pairs, and no query checkpoints either of
-them again. Frontier joins are bounded by near-dup density, not corpus size.
+The keeper graph is ``operators/dedup.keeper_pairs`` and the LSH candidate
+graph is ``operators/dedup.lsh_pairs``. Each materializes its pair list once
+(a lazy localCheckpoint, filled by the first action), reused by degree,
+two-hop, anti-join and components steps; its edge list is
+``symmetric_edges`` over those pairs, and no query checkpoints or caches
+either of them again. The LSH graph's oracle twin is ``_lsh_edges_cte``.
+Frontier joins are bounded by near-dup density, not corpus size.
 ``graph_degree_assortativity`` is the exact-integer twin of
 ``graph_assortativity``: the symmetric-marginal identity removes the sqrt.
 """
@@ -23,11 +26,29 @@ from jigsaw_spark.plans.dedup import (
     _TOKS_CTE,
     _bands_cte,
     _keeper_cluster_sql,
+    _lsh_pairs_cte,
     _minhash_cte,
     _simhash_edges_cte,
 )
 from jigsaw_spark.plans.mm import _DHASH_PAIRS_CTE, _PHASH_BYTES_CTE, mm_phash_near_dup
 from jigsaw_spark.plans.registry import _components_cte, _sym_edges_cte, _t, register
+
+
+# ---------------------------------------------------------------------------
+# The LSH candidate graph: pairs(doc_a, doc_b) and its symmetric
+# edges(u, v), the DuckDB twin of operators/dedup.lsh_pairs and
+# symmetric_edges, read by the pagerank, two-hop, BFS, triangle, neighbor
+# Jaccard, k-core, assortativity and clustering-coefficient oracles
+# ---------------------------------------------------------------------------
+
+
+def _lsh_edges_cte() -> str:
+    return f"""
+    {_TOKS_CTE}, {_SHINGLES_CTE},
+    {_minhash_cte()},
+    {_bands_cte(materialized=True)},
+    {_lsh_pairs_cte()},
+    {_sym_edges_cte(materialized=True)}"""
 
 
 @register(
@@ -36,15 +57,11 @@ from jigsaw_spark.plans.registry import _components_cte, _sym_edges_cte, _t, reg
     WITH {_TOKS_CTE}, {_SHINGLES_CTE},
     {_minhash_cte()},
     {_bands_cte()},
-    e AS (
-      SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.sig = b.sig
-                  AND a.doc_id < b.doc_id)
+    {_lsh_pairs_cte("e")}
     SELECT (SELECT count(*) FROM e) AS n_edges,
            (SELECT count(*)
-            FROM e e1 JOIN e e2 ON e2.u = e1.v
-                      JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
+            FROM e e1 JOIN e e2 ON e2.doc_a = e1.doc_b
+                      JOIN e e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
            ) AS n_triangles
     """,
     "GLOBAL triangle count over the near-dup candidate graph (cluster-"
@@ -56,13 +73,11 @@ from jigsaw_spark.plans.registry import _components_cte, _sym_edges_cte, _t, reg
     "is the LSH output, orders smaller than the corpus",
 )
 def graph_triangles_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    e = (
-        minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .localCheckpoint()
+    e = lsh_pairs(docs, "doc_id").select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
     e1 = e.alias("e1")
     e2 = e.alias("e2")
@@ -85,14 +100,12 @@ def graph_triangles_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB oracle); numpy bit-parity stays in tests/test_r4_ops.py.
 # Kept as a library entry point.
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs
     from jigsaw_spark.operators.graph import pagerank
 
     docs = _t(spark, sf_dir, "documents")
-    edges = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    return pagerank(edges, n_iters=10).orderBy(F.desc("rank"), "node").limit(50)
+    pr = pagerank(lsh_pairs(docs, "doc_id"), "doc_a", "doc_b", n_iters=10)
+    return pr.orderBy(F.desc("rank"), "node").limit(50)
 
 
 _PR_SCALE = 10**15
@@ -106,20 +119,9 @@ def _pagerank_exact_sql() -> str:
     exact SQL oracle, possible only because every iteration step is
     integer floor arithmetic (see operators.graph.pagerank_exact)."""
     head = f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
-    {_minhash_cte()},
-    {_bands_cte(materialized=True)},
-    pairs AS (
-      SELECT DISTINCT x_a.doc_id AS a, x_b.doc_id AS b
-      FROM bands x_a
-      JOIN bands x_b ON x_a.band = x_b.band AND x_a.sig = x_b.sig
-                    AND x_a.doc_id < x_b.doc_id),
-    pr_edges AS MATERIALIZED (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION
-      SELECT b AS src, a AS dst FROM pairs),
-    pr_nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM pr_edges),
-    pr_deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM pr_edges GROUP BY src),
+    WITH {_lsh_edges_cte()},
+    pr_nodes AS MATERIALIZED (SELECT DISTINCT u AS node FROM edges),
+    pr_deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM edges GROUP BY u),
     pr_consts AS MATERIALIZED (
       SELECT count(*) AS n,
              {_PR_SCALE} // count(*) AS r_init,
@@ -131,11 +133,11 @@ def _pagerank_exact_sql() -> str:
     for i in range(1, _PR_ITERS + 1):
         iters.append(f"""
     c{i} AS MATERIALIZED (
-      SELECT e.dst AS node, sum((17 * p.r) // (20 * d.deg)) AS c
+      SELECT e.v AS node, sum((17 * p.r) // (20 * d.deg)) AS c
       FROM r{i - 1} p
-      JOIN pr_deg d ON p.node = d.src
-      JOIN pr_edges e ON p.node = e.src
-      GROUP BY e.dst),
+      JOIN pr_deg d ON p.node = d.u
+      JOIN edges e ON p.node = e.u
+      GROUP BY e.v),
     r{i} AS MATERIALIZED (
       SELECT n.node, cc.base + coalesce(c{i}.c, 0) AS r
       FROM pr_nodes n
@@ -163,14 +165,14 @@ def _pagerank_exact_sql() -> str:
 def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs
     from jigsaw_spark.operators.graph import pagerank_exact
 
     docs = _t(spark, sf_dir, "documents")
-    edges = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    pr = pagerank_exact(
+        lsh_pairs(docs, "doc_id"), "doc_a", "doc_b",
+        n_iters=_PR_ITERS, scale=_PR_SCALE,
     )
-    pr = pagerank_exact(edges, n_iters=_PR_ITERS, scale=_PR_SCALE)
     top = pr.orderBy(F.desc("rank_micro"), "node").limit(50)
     return top.select(
         F.row_number()
@@ -183,37 +185,19 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_two_hop — shared LSH candidate graph (same CTE text the pagerank
-# oracle uses, kept in sync with operators/dedup.minhash_lsh_pairs)
+# graph_two_hop
 # ---------------------------------------------------------------------------
-
-
-def _lsh_edges_cte() -> str:
-    return f"""
-    {_TOKS_CTE}, {_SHINGLES_CTE},
-    {_minhash_cte()},
-    {_bands_cte(materialized=True)},
-    pairs AS (
-      SELECT DISTINCT x_a.doc_id AS a, x_b.doc_id AS b
-      FROM bands x_a
-      JOIN bands x_b ON x_a.band = x_b.band AND x_a.sig = x_b.sig
-                    AND x_a.doc_id < x_b.doc_id),
-    edges AS MATERIALIZED (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION
-      SELECT b AS src, a AS dst FROM pairs)"""
-
 
 _TWO_HOP_SQL = f"""
     WITH {_lsh_edges_cte()},
     two AS (
-      SELECT DISTINCT e1.src AS node, e2.dst AS hop2
-      FROM edges e1 JOIN edges e2 ON e1.dst = e2.src
-      WHERE e2.dst <> e1.src),
+      SELECT DISTINCT e1.u AS node, e2.v AS hop2
+      FROM edges e1 JOIN edges e2 ON e1.v = e2.u
+      WHERE e2.v <> e1.u),
     fof AS (
       SELECT t.node, t.hop2 FROM two t
-      LEFT JOIN edges d ON t.node = d.src AND t.hop2 = d.dst
-      WHERE d.src IS NULL)
+      LEFT JOIN edges d ON t.node = d.u AND t.hop2 = d.v
+      WHERE d.u IS NULL)
     SELECT node, CAST(count(*) AS BIGINT) AS n_two_hop
     FROM fof GROUP BY node
 """
@@ -230,30 +214,23 @@ _TWO_HOP_SQL = f"""
     "candidate edges bounded by the capped LSH banding",
 )
 def graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).distinct()
-    e2 = edges.select(
-        F.col("src").alias("mid"), F.col("dst").alias("hop2")
-    )
+    edges = symmetric_edges(lsh_pairs(docs, "doc_id"))
+    e2 = edges.select(F.col("u").alias("mid"), F.col("v").alias("hop2"))
     two = (
-        edges.join(e2, edges["dst"] == e2["mid"])
-        .filter(F.col("hop2") != F.col("src"))
-        .select("src", "hop2")
+        edges.join(e2, edges["v"] == e2["mid"])
+        .filter(F.col("hop2") != F.col("u"))
+        .select("u", "hop2")
         .distinct()
     )
     fof = two.join(
-        edges.select(F.col("src").alias("d_src"), F.col("dst").alias("d_dst")),
-        (two["src"] == F.col("d_src")) & (two["hop2"] == F.col("d_dst")),
+        edges.select(F.col("u").alias("d_u"), F.col("v").alias("d_v")),
+        (two["u"] == F.col("d_u")) & (two["hop2"] == F.col("d_v")),
         "left_anti",
     )
-    return fof.groupBy(F.col("src").alias("node")).agg(
+    return fof.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_two_hop")
     )
 
@@ -269,8 +246,8 @@ def _bfs_sql() -> str:
     head = f"""
     WITH {_lsh_edges_cte()},
     d0 AS MATERIALIZED (
-      SELECT DISTINCT src AS node, 0 AS dist FROM edges
-      WHERE src % 97 = 0)"""
+      SELECT DISTINCT u AS node, 0 AS dist FROM edges
+      WHERE u % 97 = 0)"""
     stages = []
     for t in range(1, _BFS_DEPTH + 1):
         stages.append(f"""
@@ -278,8 +255,8 @@ def _bfs_sql() -> str:
       SELECT node, min(dist) AS dist FROM (
         SELECT node, dist FROM d{t - 1}
         UNION ALL
-        SELECT e.dst AS node, p.dist + 1 AS dist
-        FROM d{t - 1} p JOIN edges e ON p.node = e.src) u
+        SELECT e.v AS node, p.dist + 1 AS dist
+        FROM d{t - 1} p JOIN edges e ON p.node = e.u) u
       GROUP BY node)""")
     return (
         head
@@ -303,30 +280,20 @@ def _bfs_sql() -> str:
     "under any partitioning",
 )
 def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = symmetric_edges(lsh_pairs(docs, "doc_id"))
     dist = (
-        edges.filter(F.col("src") % 97 == 0)
-        .select(F.col("src").alias("node"))
+        edges.filter(F.col("u") % 97 == 0)
+        .select(F.col("u").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
     )
     for _ in range(_BFS_DEPTH):
         hop = (
-            dist.join(edges, dist["node"] == edges["src"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+            dist.join(edges, dist["node"] == edges["u"])
+            .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
         dist = (
             dist.unionByName(hop)
@@ -344,10 +311,10 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRI_SQL = f"""
     WITH {_lsh_edges_cte()},
     tri AS (
-      SELECT p1.a AS a, p1.b AS b, p2.b AS c
+      SELECT p1.doc_a AS a, p1.doc_b AS b, p2.doc_b AS c
       FROM pairs p1
-      JOIN pairs p2 ON p2.a = p1.b
-      JOIN pairs p3 ON p3.a = p1.a AND p3.b = p2.b),
+      JOIN pairs p2 ON p2.doc_a = p1.doc_b
+      JOIN pairs p3 ON p3.doc_a = p1.doc_a AND p3.doc_b = p2.doc_b),
     verts AS (SELECT unnest([a, b, c]) AS node FROM tri)
     SELECT node, CAST(count(*) AS BIGINT) AS n_tri
     FROM verts GROUP BY node
@@ -368,10 +335,10 @@ _TRI_SQL = f"""
     "standard compact-forward scheme; all integer",
 )
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    p = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4).select(
+    p = lsh_pairs(docs, "doc_id").select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
     ab_bc = (
@@ -403,14 +370,14 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NJ_SQL = f"""
     WITH {_lsh_edges_cte()},
     deg AS MATERIALIZED (
-      SELECT src, count(*) AS d FROM edges GROUP BY src),
+      SELECT u, count(*) AS d FROM edges GROUP BY u),
     com AS MATERIALIZED (
-      SELECT p.a, p.b, count(*) AS c
+      SELECT p.doc_a, p.doc_b, count(*) AS c
       FROM pairs p
-      JOIN edges ea ON ea.src = p.a
-      JOIN edges eb ON eb.src = p.b AND eb.dst = ea.dst
-      GROUP BY p.a, p.b)
-    SELECT p.a AS doc_a, p.b AS doc_b,
+      JOIN edges ea ON ea.u = p.doc_a
+      JOIN edges eb ON eb.u = p.doc_b AND eb.v = ea.v
+      GROUP BY p.doc_a, p.doc_b)
+    SELECT p.doc_a, p.doc_b,
            CAST(coalesce(c.c, 0) AS BIGINT) AS n_common,
            CAST(da.d AS BIGINT) AS deg_a,
            CAST(db.d AS BIGINT) AS deg_b,
@@ -418,9 +385,9 @@ _NJ_SQL = f"""
                 // (da.d + db.d - coalesce(c.c, 0)) AS BIGINT)
              AS jaccard_micro
     FROM pairs p
-    JOIN deg da ON da.src = p.a
-    JOIN deg db ON db.src = p.b
-    LEFT JOIN com c ON c.a = p.a AND c.b = p.b
+    JOIN deg da ON da.u = p.doc_a
+    JOIN deg db ON db.u = p.doc_b
+    LEFT JOIN com c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
 """
 
 
@@ -438,20 +405,15 @@ _NJ_SQL = f"""
     "denominator >= 1 because every pair is itself an edge",
 )
 def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4).select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    )
-    edges = (
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ea = edges.select(F.col("src").alias("a"), F.col("dst").alias("na"))
-    eb = edges.select(F.col("src").alias("bb"), F.col("dst").alias("nb"))
+    lsh = lsh_pairs(docs, "doc_id")
+    pairs = lsh.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    edges = symmetric_edges(lsh)
+    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    ea = edges.select(F.col("u").alias("a"), F.col("v").alias("na"))
+    eb = edges.select(F.col("u").alias("bb"), F.col("v").alias("nb"))
     com = (
         pairs.join(ea, "a")
         .join(
@@ -463,10 +425,10 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = (
         pairs.join(
-            deg.select(F.col("src").alias("a"), F.col("d").alias("deg_a")), "a"
+            deg.select(F.col("u").alias("a"), F.col("d").alias("deg_a")), "a"
         )
         .join(
-            deg.select(F.col("src").alias("b"), F.col("d").alias("deg_b")), "b"
+            deg.select(F.col("u").alias("b"), F.col("d").alias("deg_b")), "b"
         )
         .join(com, ["a", "b"], "left_outer")
         .select(
@@ -492,22 +454,22 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_round_sql(i: int, k: int) -> str:
     p = i - 1
     return f"""
-    d{i} AS (SELECT src, count(*) AS d FROM e{p} GROUP BY src),
-    k{i} AS MATERIALIZED (SELECT src FROM d{i} WHERE d >= {k}),
+    d{i} AS (SELECT u, count(*) AS d FROM e{p} GROUP BY u),
+    k{i} AS MATERIALIZED (SELECT u FROM d{i} WHERE d >= {k}),
     e{i} AS MATERIALIZED (
-      SELECT e.src, e.dst FROM e{p} e
-      JOIN k{i} a ON e.src = a.src
-      JOIN k{i} b ON e.dst = b.src)"""
+      SELECT e.u, e.v FROM e{p} e
+      JOIN k{i} a ON e.u = a.u
+      JOIN k{i} b ON e.v = b.u)"""
 
 
 _KCORE_SQL = f"""
     WITH {_lsh_edges_cte()},
-    e0 AS MATERIALIZED (SELECT src, dst FROM edges),
+    e0 AS MATERIALIZED (SELECT u, v FROM edges),
     {_kcore_round_sql(1, 2)},
     {_kcore_round_sql(2, 2)},
     {_kcore_round_sql(3, 2)}
-    SELECT src AS node, CAST(count(*) AS BIGINT) AS degree
-    FROM e3 GROUP BY src
+    SELECT u AS node, CAST(count(*) AS BIGINT) AS degree
+    FROM e3 GROUP BY u
 """
 
 
@@ -519,45 +481,37 @@ _KCORE_SQL = f"""
     "restricted to survivors, repeated — the degeneracy pruning that "
     "removes whisker/chain artifacts from dedup clusters before "
     "component clustering. Each round is ONE degree hash-agg + two "
-    "node-keyed semi-join edge restrictions (the unrolled certifiable "
+    "node-keyed semi-join edge restrictions behind one lazy "
+    "localCheckpoint (the unrolled certifiable "
     "form of the peel-to-fixpoint loop, like graph_bfs_layers); at "
     "production scale rounds run until no node drops, with the same "
     "per-round plan. All integer",
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .distinct()
-    )
+    e = symmetric_edges(lsh_pairs(docs, "doc_id"))
     # Each peel round references the previous edge set THREE times (degree
-    # agg + two semi-joins); without a lineage cut the LSH signature
-    # pipeline would re-evaluate 3^rounds times (the Spark twin of the
-    # DuckDB multi-referenced-CTE trap — AS MATERIALIZED there, persist
-    # here). The cached sets are dim-sized (candidate edges), never corpus
-    # rows, so executor memory is KB even at production scale.
-    e = edges.persist()
+    # agg + two semi-joins); without a lineage cut every round would
+    # re-plan all earlier rounds (the Spark twin of the DuckDB
+    # multi-referenced-CTE trap — AS MATERIALIZED there, a lazy
+    # localCheckpoint here, as in graph_bfs_layers). The stored sets are
+    # candidate edges, never corpus rows, and nothing stays cached after
+    # the query.
     for _ in range(3):
         keep = (
-            e.groupBy("src")
+            e.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= 2)
-            .select("src")
+            .select("u")
         )
         e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .persist()
+            e.join(keep, "u", "left_semi")
+            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
+            .localCheckpoint(eager=False)
         )
-    return e.groupBy(F.col("src").alias("node")).agg(
+    return e.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     )
 
@@ -569,12 +523,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ASSORT_SQL = f"""
     WITH {_lsh_edges_cte()},
     deg AS MATERIALIZED (
-      SELECT src, count(*) AS d FROM edges GROUP BY src),
+      SELECT u, count(*) AS d FROM edges GROUP BY u),
     ed AS (
       SELECT da.d AS x, db.d AS y
       FROM edges e
-      JOIN deg da ON e.src = da.src
-      JOIN deg db ON e.dst = db.src),
+      JOIN deg da ON e.u = da.u
+      JOIN deg db ON e.v = db.u),
     anchors AS (
       SELECT count(*) AS ne,
              CAST(sum(x) AS BIGINT) // count(*) AS mx,
@@ -614,28 +568,14 @@ _ASSORT_SQL = f"""
     "the edge list, one moment agg — all candidate-edge sized",
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs, symmetric_edges
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .distinct()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    edges = symmetric_edges(lsh_pairs(docs, "doc_id"))
+    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ed = (
-        edges.join(deg.select(F.col("src"), F.col("d").alias("x")), "src")
-        .join(
-            deg.select(
-                F.col("src").alias("dst"), F.col("d").alias("y")
-            ),
-            "dst",
-        )
+        edges.join(deg.select("u", F.col("d").alias("x")), "u")
+        .join(deg.select(F.col("u").alias("v"), F.col("d").alias("y")), "v")
         .select("x", "y")
     )
     anchors = ed.agg(
@@ -855,14 +795,14 @@ def _coeff_sql() -> str:
     return f"""
     WITH {_lsh_edges_cte()},
     tri AS (
-      SELECT p1.a AS a, p1.b AS b, p2.b AS c
+      SELECT p1.doc_a AS a, p1.doc_b AS b, p2.doc_b AS c
       FROM pairs p1
-      JOIN pairs p2 ON p2.a = p1.b
-      JOIN pairs p3 ON p3.a = p1.a AND p3.b = p2.b),
+      JOIN pairs p2 ON p2.doc_a = p1.doc_b
+      JOIN pairs p3 ON p3.doc_a = p1.doc_a AND p3.doc_b = p2.doc_b),
     tcnt AS (
       SELECT node, count(*) AS n_tri
       FROM (SELECT unnest([a, b, c]) AS node FROM tri) GROUP BY node),
-    deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src)
+    deg AS (SELECT u AS node, count(*) AS d FROM edges GROUP BY u)
     SELECT deg.node,
            CAST(deg.d AS BIGINT) AS degree,
            CAST(coalesce(t.n_tri, 0) AS BIGINT) AS n_tri,
@@ -881,17 +821,15 @@ def _coeff_sql() -> str:
     "a duplicate CLIQUE (safe to collapse wholesale), near 0 it chains "
     "borderline collisions (keep pairwise verification). Triangles use "
     "the canonical a<b<c compact-forward enumeration (fan-out bounded "
-    "by LSH-capped candidate degree); ONE pair list localCheckpoint "
-    "feeds both the triangle joins and the degree agg",
+    "by LSH-capped candidate degree); ONE materialized pair list "
+    "(lsh_pairs) feeds both the triangle joins and the degree agg",
 )
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jigsaw_spark.operators.dedup import minhash_lsh_pairs
+    from jigsaw_spark.operators.dedup import lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    p = (
-        minhash_lsh_pairs(docs, "doc_id", num_hashes=16, bands=4)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()
+    p = lsh_pairs(docs, "doc_id").select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
     ab_bc = (
         p.alias("p1")

@@ -168,12 +168,15 @@ def test_keeper_frames_matches_separate_derivations(docs, tables):
     assert hand
 
 
-def test_keeper_pairs_is_materialized_once(docs):
-    """keeper_pairs returns its pairs behind its own (lazy) checkpoint, so
-    consumers read stored pairs and add no checkpoint of their own."""
-    from jigsaw_spark.operators.dedup import keeper_pairs
+@pytest.mark.parametrize("graph", ["keeper_pairs", "lsh_pairs"])
+def test_graph_pairs_are_materialized_once(docs, graph):
+    """keeper_pairs and lsh_pairs return their pairs behind their own
+    (lazy) checkpoint, so consumers read stored pairs and add no
+    checkpoint of their own."""
+    from jigsaw_spark.operators import dedup
 
-    plan = keeper_pairs(docs, "doc_id")._jdf.queryExecution().optimizedPlan()
+    pairs = getattr(dedup, graph)(docs, "doc_id")
+    plan = pairs._jdf.queryExecution().optimizedPlan()
     assert plan.nodeName() == "LogicalRDD"
 
 

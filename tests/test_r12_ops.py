@@ -63,11 +63,15 @@ def test_kcore_matches_peeling_replay(spark):
         keep = {n for n, d in deg.items() if d >= 2}
         edges = {(s, d) for s, d in edges if s in keep and d in keep}
     want = dict(Counter(s for s, _ in edges))
+    spark.catalog.clearCache()
     got = {
         r["node"]: r["degree"]
         for r in entrymod.queries()["graph_kcore"](spark, SF).collect()
     }
     assert got == want
+    # the peel rounds cut lineage without caching, so no cached data
+    # outlives the query and reaches the next one's plan
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_column_profile_matches_recompute(spark):

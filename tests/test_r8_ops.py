@@ -4,6 +4,7 @@ conservation, chi-square reconstruction, histogram bounds)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -105,6 +106,47 @@ def test_bfs_layers_match_python_bfs(spark):
         for r in entrymod.queries()["graph_bfs_layers"](spark, SF).collect()
     }
     assert got == dist
+
+
+@pytest.mark.parametrize(
+    "name, want",
+    [
+        ("graph_two_hop", [(97, 1), (99, 1)]),
+        ("graph_bfs_layers", [(97, 0), (98, 1), (99, 2)]),
+    ],
+    ids=["graph_two_hop", "graph_bfs_layers"],
+)
+def test_lsh_chain_graph_queries_match_oracle(spark, tmp_path, name, want):
+    """Three docs whose LSH candidate graph is the chain 97-98-99 (no
+    97-99 edge): each end is the other's only two-hop neighbour, and BFS
+    from the seed 97 reaches 99 at depth 2. Both queries are empty on the
+    sf0.01 corpus, so this is where their Spark bodies and oracles can
+    disagree."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jigsaw_spark.plans.queries import QUERIES
+
+    r = random.Random(3)
+    base = r.sample([f"w{i}" for i in range(400)], 30)
+    texts = [" ".join(base[:20]), " ".join(base[3:27]), " ".join(base[10:30])]
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([97, 98, 99], pa.int64()),
+            "text": pa.array(texts, pa.string()),
+        }),
+        path,
+    )
+    spec = QUERIES[name]
+    got = sorted(tuple(row) for row in spec.spark(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    assert got == sorted(con.execute(spec.oracle).fetchall())
+    assert got == want
 
 
 def test_attribution_linear_conserves_credit(spark):

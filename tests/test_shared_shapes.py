@@ -24,6 +24,14 @@ SHAPES = {
     "doc_a AS u, doc_b AS v": [("registry.py", "_sym_edges_cte")],
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]": [("registry.py", "_TRIGRAMS")],
     "min(md5(CAST(seed AS VARCHAR) || '|' || shingle))": [("dedup.py", "_minhash_cte")],
+    # the LSH bucket self-join, under each alias pair it was written with
+    "a.band = b.band AND a.sig = b.sig": [
+        ("dedup.py", "_lsh_pairs_cte"),
+        # the skew-capped oracle also joins each bucket's size
+        ("dedup.py", "dedup_lsh_capped"),
+    ],
+    "x_a.band = x_b.band AND x_a.sig = x_b.sig": [],
+    "a.band = b2.band AND a.sig = b2.sig": [],
     "JOIN ph_bytes y ON x.byte_idx = y.byte_idx": [("mm.py", "_dhash_ham_cte")],
     '.format("memory")': [("stream.py", "_drain")],
     # the per-doc near-dup cluster label: exact keeper → its component
@@ -40,6 +48,8 @@ SHAPES = {
     # the reversed orientation of a Spark pair list's symmetric edge list;
     # it is operators/dedup.symmetric_edges
     'F.col("doc_b").alias("u")': [],
+    'F.col("doc_b").alias("src")': [],
+    'F.col("b").alias("src")': [],
 }
 
 # Plan functions that fold components over exact keepers or pair arms, not
@@ -108,6 +118,21 @@ def test_cluster_labels_come_from_near_dup_keepers():
     assert both == KEEPER_COMPONENT_FOLDS
 
 
+def _rechecked(graph: str) -> list[str]:
+    """Plan functions that call ``localCheckpoint`` on a ``graph(...)``
+    call, which already returns materialized pairs."""
+    return [
+        top.name
+        for top in _plan_functions()
+        for n in ast.walk(top)
+        if isinstance(n, ast.Call)
+        and _callee(n) == "localCheckpoint"
+        and isinstance(n.func, ast.Attribute)
+        and isinstance(n.func.value, ast.Call)
+        and _callee(n.func.value) == graph
+    ]
+
+
 def test_keeper_graph_comes_from_keeper_pairs():
     """The Spark keeper graph is operators/dedup.keeper_pairs, which
     materializes its pairs itself: no plan function rebuilds it from
@@ -117,14 +142,27 @@ def test_keeper_graph_comes_from_keeper_pairs():
         for top in _plan_functions()
         if {"exact_dedup", "simhash_pairs"} <= _called_names(top)
     ]
-    rechecked = [
-        top.name
-        for top in _plan_functions()
-        for n in ast.walk(top)
-        if isinstance(n, ast.Call)
-        and _callee(n) == "localCheckpoint"
-        and isinstance(n.func, ast.Attribute)
-        and isinstance(n.func.value, ast.Call)
-        and _callee(n.func.value) == "keeper_pairs"
+    assert hand == [] and _rechecked("keeper_pairs") == []
+
+
+def test_lsh_graph_comes_from_lsh_pairs():
+    """The graph queries' MinHash-LSH candidate graph is
+    operators/dedup.lsh_pairs, which materializes its pairs itself: no
+    graph query builds it from minhash_lsh_pairs, and no plan function
+    checkpoints it again."""
+    tree = ast.parse((PLANS / "graph.py").read_text())
+    assert "minhash_lsh_pairs" not in _called_names(tree)
+    assert _rechecked("lsh_pairs") == []
+
+
+def test_plans_cache_nothing():
+    """No query caches: a ``persist``/``cache`` left behind by one query
+    changes the plans and job counts of the queries run after it in the
+    same session. Lineage is cut with ``localCheckpoint``."""
+    cached = [
+        (path.name, n.lineno)
+        for path in sorted(PLANS.glob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call) and _callee(n) in {"persist", "cache"}
     ]
-    assert hand == [] and rechecked == []
+    assert cached == []
